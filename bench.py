@@ -439,6 +439,17 @@ def _sf_of(sf_dir: str) -> float:
         return -1.0
 
 
+def suite_names(requested: list[str] | None, qs: dict) -> list[str]:
+    """The queries a suite run times: ``requested``, else BENCH_QUERIES.
+    Every name must be in ``queries()`` — a typo or a dropped query would
+    otherwise time a partial set silently."""
+    names = requested or BENCH_QUERIES
+    unknown = [q for q in names if q not in qs]
+    if unknown:
+        raise SystemExit(f"unknown query name(s) {unknown} — not in queries()")
+    return names
+
+
 def run_suite(requested: list[str] | None = None) -> None:
     import __spark_entry__ as entrymod
     from servico_ocr_spark.session import get_spark
@@ -458,14 +469,7 @@ def run_suite(requested: list[str] | None = None) -> None:
     # box is ±20-30%; CLAUDE.md policy). Methodology in BENCH/BASELINE.md.
     timings = {}
     total = 0.0
-    unknown = [q for q in (requested or []) if q not in qs]
-    if unknown:
-        raise SystemExit(
-            f"unknown query name(s) {unknown} — not in queries(); "
-            "a typo here would otherwise time a partial set silently"
-        )
-    names = [q for q in (requested or BENCH_QUERIES) if q in qs]
-    for name in names:
+    for name in suite_names(requested, qs):
         _materialize(qs[name](spark, SF_DIR))
         best = float("inf")
         for _ in range(3):

@@ -6,7 +6,7 @@ non-SQL-expressible), so their DuckDB oracle is a committed golden parquet
 instead of a SQL twin. The golden is produced HERE by the single-threaded
 pure-Python oracle path (:func:`servico_ocr_spark.pipeline.analyze_page_row`
 — the same path `tests/test_reference_differential.py` proves byte-identical
-to the actual reference), NOT by the Spark mapInPandas stage. The driver's
+to the actual reference), NOT by the Spark mapInArrow stage. The driver's
 hash row therefore checks: distributed Spark execution ≡ committed
 single-threaded oracle output.
 

@@ -2,8 +2,8 @@
 
 This is the single source of truth for the reference pipeline semantics
 (``AnaliseImagensOCR``, app/util_ocr.py:38-614). It is pure Python — the
-pytest oracle calls it directly, and the Spark pipeline calls it inside an
-Arrow ``mapInPandas`` stage, so the two paths can never diverge.
+pytest oracle calls it directly, and the Spark pipeline calls it inside a
+``mapInArrow`` stage, so the two paths can never diverge.
 
 Stages (app/util_ocr.py:178-306, the reference's hardcoded logical plan):
   1. token→box assembly (processar_img_ocr, :97-164)

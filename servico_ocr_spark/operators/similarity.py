@@ -491,11 +491,11 @@ def margin_bitext(
     deterministic on both engines.
 
     Scale shape: with ``candidates=None`` the scored pair table is the
-    brute cross product with the SMALLER side broadcast — correct at
-    calibration scale, Θ(|X|·|Y|) like `brute_force_topk`. At corpus
-    scale pass ``candidates`` = any (x_id, y_id, cos_sim_e6) frame
-    from the ANN path (`ivf_ann_topk` / `lsh_ann_topk` unioned both
-    directions) — the margin stage itself is candidate-bounded: the
+    brute cross product with ``y`` broadcast (pass the smaller set as
+    ``y``) — correct at calibration scale, Θ(|X|·|Y|) like
+    `brute_force_topk`. At corpus scale pass ``candidates`` = any
+    (x_id, y_id, cos_sim_e6) frame from the ANN path (`ivf_ann_topk` /
+    `lsh_ann_topk` unioned both directions) — the margin stage itself is candidate-bounded: the
     scored table is lazily localCheckpointed (it feeds both
     neighborhood aggs and the final ranking — the triple-reference
     lesson), the per-endpoint averages are two combinable aggs whose

@@ -1,15 +1,15 @@
 """Spark face of the HTML main-content extractor (north-rule web face).
 
-``extract_main_content`` wraps the pure kernel
-(`core/html_extract.extract_main`) in exactly ONE Arrow-batched
-``mapInPandas`` boundary — the same execution shape as the OCR pipeline
-(`pipeline.run_extraction`): the scan stays JVM-side and column-pruned to
-``(url, html)``, the per-document Python work is batch-vectorized through
-Arrow, and everything downstream (hashing, joins, dedup over the
-extracted text) is whole-stage-codegen DataFrame expressions again.
+``extract_main_content`` runs the pure kernel
+(`core/html_extract.extract_main`) through the same one Arrow boundary as
+the OCR pipeline (`boundary.map_documents`, a ``mapInArrow``): the scan
+stays JVM-side and column-pruned to ``(url, html)``, the per-document
+Python work sees plain dicts, and everything downstream (hashing, joins,
+dedup over the extracted text) is whole-stage-codegen DataFrame
+expressions again.
 
 At 100 TB the operator is embarrassingly parallel (no shuffle at all —
-``.explain`` shows scan → mapInPandas, nothing else), so scaling is
+``.explain`` shows scan → MapInArrow, nothing else), so scaling is
 bounded by input split sizing (`spark.sql.files.maxPartitionBytes`) and
 kernel throughput, not the planner. Skewed page sizes are mild compared
 with the OCR path's multipage PDFs (HTML bytes per doc vary ~10², not
@@ -20,14 +20,14 @@ proves otherwise.
 from __future__ import annotations
 
 import re
-from typing import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from ..boundary import map_documents
 from ..core.html_extract import extract_main
 
 SPAN_SCHEMA = StructType(
@@ -57,6 +57,19 @@ _METRIC_COLS = (
 )
 
 
+def _main_content_row(
+    row: dict, url_col: str, html_col: str, min_words: int
+) -> dict:
+    r = extract_main(row[html_col], min_words=min_words)
+    out = {col: r[col] for col in _METRIC_COLS}
+    # passed through unchanged: the schema declares url non-null, so a
+    # null url fails the task loudly instead of writing a keyless row
+    out["url"] = row[url_col]
+    out["main_text"] = r["main_text"]
+    out["spans"] = [{"start": start, "end": end} for start, end in r["spans"]]
+    return out
+
+
 def extract_main_content(
     pages: DataFrame,
     url_col: str = "url",
@@ -71,37 +84,12 @@ def extract_main_content(
     stance (app/util_processar_pasta.py:412-421) without a side channel,
     because unlike OCR there is no exception path to route.
     """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            results = [
-                extract_main(h, min_words=min_words)
-                for h in batch[html_col]
-            ]
-            out = pd.DataFrame(
-                {
-                    # passed through unchanged: the schema declares url
-                    # non-null, so a null url fails the task loudly —
-                    # .astype(str) would mask it as the literal 'None'
-                    "url": batch[url_col],
-                    "main_text": [r["main_text"] for r in results],
-                    "spans": [
-                        [
-                            {"start": start, "end": end}
-                            for start, end in r["spans"]
-                        ]
-                        for r in results
-                    ],
-                }
-            )
-            for col in _METRIC_COLS:
-                out[col] = pd.array(
-                    [r[col] for r in results], dtype="int64"
-                )
-            yield out
-
-    return pages.select(url_col, html_col).mapInPandas(
-        kernel, schema=MAIN_CONTENT_SCHEMA
+    per_doc = partial(
+        _main_content_row, url_col=url_col, html_col=html_col,
+        min_words=min_words,
+    )
+    return map_documents(
+        pages.select(url_col, html_col), per_doc, MAIN_CONTENT_SCHEMA
     )
 
 
@@ -120,7 +108,7 @@ def web_analysis(
     the scanner never raises), so unlike OCR there is no error path to
     route — a bad page is an ordinary row with zero blocks.
 
-    ``spark_partition_id()`` is taken directly on the mapInPandas output
+    ``spark_partition_id()`` is taken directly on the mapInArrow output
     (no exchange in between), so it identifies the exact task that ran
     the kernel for each row — at 10^12 docs that is what a re-run /
     straggler investigation needs to find the offending input split.
@@ -194,7 +182,7 @@ def drop_repeated_paragraphs(
     document id to reassemble. Every input document survives: empty/null
     texts ride through ``posexplode_outer`` as sentinel rows instead of a
     restoring join (which would re-execute the expensive upstream — e.g.
-    the extraction MapInPandas — a second time just to list ids), and the
+    the extraction MapInArrow — a second time just to list ids), and the
     sentinel rows are salted with the doc id in the window key so a
     corpus with many empty documents cannot create a hot '' partition.
 

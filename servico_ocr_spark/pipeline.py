@@ -4,10 +4,10 @@ Spark-first design notes (this is where the 100 TB story lives):
 
 * **Zero-shuffle core.** One input row = one document, and every analysis
   stage (assembly → enrichment → classification → ordering → render) is
-  per-document, so the whole pipeline is a single ``mapInPandas`` over the
-  scan — no groupBy, no join, no shuffle in the hot path. The reference's
-  process-pool fan-out (app/util_fila.py) becomes plain Spark task
-  parallelism.
+  per-document, so the whole pipeline is a single ``mapInArrow`` over the
+  scan (``boundary.map_documents``) — no groupBy, no join, no shuffle in
+  the hot path. The reference's process-pool fan-out (app/util_fila.py)
+  becomes plain Spark task parallelism.
 * **Skew.** Catalyst can't see document weight inside the UDF, so weight is
   handled in data space: a cheap page-count estimate is parsed from the
   payload header JVM-side, and :func:`weighted_repartition` spreads heavy
@@ -28,11 +28,10 @@ Spark-first design notes (this is where the 100 TB story lives):
 from __future__ import annotations
 
 from functools import partial
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .boundary import map_documents
 from .core.analyze import (
     analyze_document,
     assemble_text,
@@ -111,33 +110,20 @@ def _error_row(url: str, exc: Exception) -> dict:
     }
 
 
-def _process_batches(
-    batches: Iterable[pd.DataFrame], renders: bool = True
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel. Row = document; Arrow batches in, one result row
-    per document out. The loop is per-*document* (the correct vectorization
-    grain — all token/box work inside is per-doc pure Python over tiny
-    in-memory lists, exactly like one reference worker task)."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    for batch in batches:
-        out = []
-        urls = batch["url"].tolist()
-        htmls = batch["html"].tolist()
-        ests = batch["est_pages"].tolist() if "est_pages" in batch else [None] * len(urls)
-        for url, html, est in zip(urls, htmls, ests):
-            try:
-                row = analyze_page_row(url, html, renders=renders)
-            except Exception as exc:  # error side-output, never fail the job
-                row = _error_row(url, exc)
-            row["partition_id"] = pid
-            row["dthr"] = JOB_TS
-            row["est_pages"] = est
-            out.append(row)
-        if out:
-            yield pd.DataFrame(out)
+def _analyze_row(row: dict, renders: bool = True) -> dict:
+    """Per-document kernel of :func:`run_extraction`: one staged row
+    (url, html, est_pages, partition_id) → one ANALYSIS_SCHEMA row. All
+    token/box work inside is per-doc pure Python over tiny in-memory lists,
+    exactly like one reference worker task."""
+    url = row["url"]
+    try:
+        out = analyze_page_row(url, row["html"], renders=renders)
+    except Exception as exc:  # error side-output, never fail the job
+        out = _error_row(url, exc)
+    out["partition_id"] = row["partition_id"]
+    out["dthr"] = JOB_TS
+    out["est_pages"] = row["est_pages"]
+    return out
 
 
 def with_page_estimate(pages: DataFrame) -> DataFrame:
@@ -265,8 +251,12 @@ def run_extraction(
     staged = with_page_estimate(pages.select("url", "html"))
     if balance:
         staged = weighted_repartition(staged, num_partitions=num_partitions)
-    kernel = partial(_process_batches, renders=renders)
-    return staged.mapInPandas(kernel, schema=ANALYSIS_SCHEMA)
+    # evaluated in the kernel's own task (no exchange in between), so it
+    # names the task that analyzed the row
+    staged = staged.withColumn("partition_id", F.spark_partition_id())
+    return map_documents(
+        staged, partial(_analyze_row, renders=renders), ANALYSIS_SCHEMA
+    )
 
 
 def docs_table(analysis: DataFrame) -> DataFrame:

@@ -17,7 +17,7 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
@@ -295,7 +295,11 @@ def cms_stream(
     exactly the batch sketch over the union of batches (tested)."""
     from ..operators.stats import cms_cells
 
-    cells = cms_cells(stream, value_col, depth, width, weight_col)
+    # a NULL value hashes to no cell (the batch sketch's col-NULL row is
+    # never read by a point estimate); its key would kill the stream
+    cells = cms_cells(stream, value_col, depth, width, weight_col).where(
+        F.col("col").isNotNull()
+    )
 
     def fn(
         key, batches: Iterable[pd.DataFrame], state: GroupState
@@ -351,7 +355,11 @@ def nb_count_stream(
     the EXACT batch-trained weights (tested)."""
     from ..operators.classify import nb_count_rows
 
-    rows = nb_count_rows(stream, label_col, text_col, dims)
+    # a NULL label adds to no count in batch nb_train either; its key
+    # would kill the stream
+    rows = nb_count_rows(stream, label_col, text_col, dims).where(
+        F.col("y").isNotNull()
+    )
 
     def fn(
         key, batches: Iterable[pd.DataFrame], state: GroupState
@@ -405,7 +413,11 @@ def dsir_count_stream(
     the EXACT batch-trained importance model (tested)."""
     from ..operators.classify import dsir_count_rows
 
-    rows = dsir_count_rows(stream, target_col, text_col, dims)
+    # a NULL flag is not a target (batch: target = ``t = 1``) but its
+    # grams still count as raw; as a key it would kill the stream
+    rows = dsir_count_rows(stream, target_col, text_col, dims).withColumn(
+        "t", F.coalesce("t", F.lit(0).cast("long"))
+    )
 
     def fn(
         key, batches: Iterable[pd.DataFrame], state: GroupState

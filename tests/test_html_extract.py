@@ -411,7 +411,7 @@ def test_paragraph_dedup_single_input_pass_no_join(spark):
     # the kernel must run ONCE (a restoring join would re-execute it just
     # to list ids); only the paragraph-count window and the reassembly
     # groupBy may shuffle
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert plan.count("Exchange hashpartitioning") == 2
     assert "Join" not in plan
 
@@ -428,7 +428,7 @@ def test_html_extract_plan_shuffle_free_and_pruned(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(extract_main_content(html_pages_from_documents(docs)))
     assert "Exchange" not in plan  # no shuffle anywhere in the operator
-    assert plan.count("MapInPandas") == 1  # exactly one Python boundary
+    assert plan.count("MapInArrow") == 1  # exactly one Python boundary
     scan = next(line for line in plan.splitlines() if "FileScan" in line)
     # page synthesis needs doc_id/text/source only — lang/n_chars pruned
     assert "n_chars" not in scan and "lang" not in scan

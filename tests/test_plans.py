@@ -106,7 +106,7 @@ def test_bucketed_write_prunes_partitions(spark, tmp_path):
 
 def test_no_row_at_a_time_python_anywhere(spark):
     """input_hint: 'vectorized pandas/Arrow UDFs (no per-row Python)
-    throughout'. Arrow stages (MapInPandas/ArrowEvalPython) are the
+    throughout'. Arrow stages (MapInArrow/MapInPandas/ArrowEvalPython) are the
     sanctioned Python path; BatchEvalPython (pickled row-at-a-time udf())
     must never appear in any contract query's plan."""
     for name, fn in entrymod.queries().items():
@@ -179,7 +179,7 @@ def test_minhash_fixture_reuses_exchanges(spark):
     """The minhash build references its capped word table six times
     logically (sig self-join x2, verification x2, sizes x2); the EXECUTED
     plan must collapse them via runtime exchange reuse — otherwise
-    extract_neardups would re-run the extraction mapInPandas once per
+    extract_neardups would re-run the extraction mapInArrow once per
     reference instead of once per job (BENCH/PLANS.md §6)."""
     df = entrymod.queries()["hotshingle_neardups"](spark, SF)
     df.collect()

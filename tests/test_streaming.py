@@ -1,5 +1,7 @@
 """Incremental (Structured Streaming, AvailableNow) execution tests."""
 
+import pytest
+
 from servico_ocr_spark.corpus import build_corpus
 from servico_ocr_spark.schemas import PAGES_SCHEMA
 from servico_ocr_spark.streaming import run_available_now
@@ -743,3 +745,61 @@ def test_dsir_count_stream_final_cells_reproduce_batch_model(
         map(tuple, dimw_b.collect())
     )
     assert tot_s.collect() == tot_b.collect()
+
+
+
+@pytest.mark.parametrize("op", ["cms", "nb", "dsir"])
+def test_count_streams_survive_null_keys(spark, tmp_path, op):
+    """A NULL value (cms), label (nb) or target flag (dsir) must not kill
+    the stream: cms and nb drop the row (batch nb_train counts a NULL
+    label nowhere), dsir counts its grams as non-target (batch target is
+    ``t = 1``). Final cells equal the batch counts under those rules."""
+    from pyspark.sql import functions as F
+
+    from servico_ocr_spark.operators import cms_sketch
+    from servico_ocr_spark.operators.classify import (
+        dsir_count_rows, nb_count_rows,
+    )
+    from servico_ocr_spark.streaming.stateful import (
+        cms_stream, dsir_count_stream, nb_count_stream,
+    )
+
+    schema = "v string, text string, y long, t long"
+    rows = [
+        ("alpha", "quantum flux resonance", 1, 1),
+        (None, "plain filler words", None, None),
+        ("beta", "plain other words", 0, 0),
+    ]
+    docs = spark.createDataFrame(rows, schema)
+    if op == "cms":
+        run = lambda df: cms_stream(df, "v", depth=2, width=8)
+        cols = ("d", "col", "cms")
+        want = cms_sketch(docs.where(F.col("v").isNotNull()), "v",
+                          depth=2, width=8)
+    elif op == "nb":
+        run = lambda df: nb_count_stream(df, dims=16)
+        cols = ("dim", "y", "cnt")
+        want = nb_count_rows(docs.where(F.col("y").isNotNull()), dims=16)
+    else:
+        run = lambda df: dsir_count_stream(df, dims=16)
+        cols = ("dim", "t", "cnt")
+        want = dsir_count_rows(docs.fillna(0, ["t"]), dims=16)
+    if op != "cms":
+        want = want.groupBy("dim", cols[1]).agg(F.count("*").alias("cnt"))
+
+    input_dir = str(tmp_path / "in")
+    output_dir = str(tmp_path / "out")
+    docs.write.parquet(input_dir)
+    (
+        run(spark.readStream.schema(schema).parquet(input_dir))
+        .writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    got = sorted(tuple(r[c] for c in cols)
+                 for r in spark.read.parquet(output_dir).collect())
+    assert got and got == sorted(tuple(r[c] for c in cols)
+                                 for r in want.collect())
