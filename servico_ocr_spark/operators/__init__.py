@@ -173,6 +173,8 @@ from .urls import (  # noqa: F401
     path_prefix_rollup,
     registered_domain,
     robots_disallow,
+    robots_match,
+    robots_paths,
     scd2_intervals,
     url_dedup,
     url_host,

@@ -274,9 +274,7 @@ def pagerank(
     iterations: int = 5,
     scale: int = 1_000_000,
     damping_pct: int = 85,
-    checkpoint_every: int | None = None,
     seeds: DataFrame | None = None,
-    checkpoint_edges: bool = False,
 ) -> DataFrame:
     """Fixed-point integer PageRank over a distinct-edge table:
     ``(node, rank)`` after ``iterations`` synchronous rounds.
@@ -296,10 +294,7 @@ def pagerank(
     sum by dst, so the static edge exchange is reused across rounds
     (same runtime-reuse mechanism the minhash build locks in
     test_minhash_fixture_reuses_exchanges). A hot dst (hub with 10^9
-    in-links) combines map-side. For long runs set ``checkpoint_every``
-    to break lineage with ``localCheckpoint`` every K rounds (the star
-    contraction discipline in `dedup.neardup_components`); the default
-    keeps the fixed-K plan lazy, which AQE plans fine for K ≤ ~10.
+    in-links) combines map-side.
 
     ``seeds`` (optional, one-column node frame) switches to
     PERSONALIZED PageRank: the teleport/base term lands ONLY on the
@@ -313,20 +308,23 @@ def pagerank(
     seeded variant has the SAME per-round plan — one join + one
     map-side-combinable sum, zero extra shuffles.
 
-    ``checkpoint_edges=True`` lazily ``localCheckpoint``s the edge table
-    before iterating. The iteration references ``edges`` from the
-    out-degrees, the node universe (twice) and every per-round join, so
-    when the edge frame is a DERIVED relation (regex canonicalization,
-    self-join, distinct — e.g. a host-graph collapse) the uncut plan
-    re-executes that upstream O(iterations) times: measured 44 FileScans
-    / 0 ReusedExchange and 19.5 s for host_pagerank at sf0.1 vs 3.3 s
-    for page-level pagerank over a plain parquet scan. Same discipline
-    as :func:`bfs_depths` (edge cut measured 9.6 → 3.1 s). Default off:
-    for a raw parquet edge table runtime exchange reuse already dedupes
-    the cheap scan and the extra materialization is pure cost.
+    The edge table is always lazily ``localCheckpoint``ed once, before
+    iterating. The iteration references ``edges`` from the out-degrees,
+    the node universe (twice) and every per-round join, and every
+    caller passes a DERIVED relation (link extraction → distinct, a
+    host-graph self-join, a word-adjacency explode). Uncut, the logical
+    plan inlines that whole upstream about 20 times, so the cost is
+    not only re-execution — runtime exchange reuse dedupes much of
+    that — but driver-side analysis, physical planning and AQE
+    re-planning of the bloated plan in every round. Measured on the
+    sf0.1 link graph (``local[4]``, warm query + parquet write): 4.7–5.3
+    s uncut, 3.1–4.0 s with this cut; a cut after every round took
+    4.3 s and an eager cut 3.7 s, so the one lazy cut stays.
+    host_pagerank uncut re-ran its regex upstream 44× (19.5 s vs 3.3
+    s). Same discipline as :func:`bfs_depths` (edge cut measured 9.6 →
+    3.1 s).
     """
-    if checkpoint_edges:
-        edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    edges = edges.select("src", "dst").localCheckpoint(eager=False)
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -355,7 +353,7 @@ def pagerank(
         )
     edges_deg = edges.join(out_deg, "src")  # static across rounds
     ranks = nodes.select("node", F.col("_r0").alias("rank"))
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
             edges_deg.join(
                 ranks, edges_deg["src"] == ranks["node"]
@@ -376,8 +374,6 @@ def pagerank(
             .cast("long")
             .alias("rank"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 

@@ -454,33 +454,27 @@ def path_prefix_rollup(
     )
 
 
-def robots_disallow(
-    pages: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
+def robots_paths(
+    pages: DataFrame, url_col: str = "url", id_col: str = "doc_id"
 ) -> DataFrame:
-    """``(doc_id, host, path, n_rules_matched, blocked)``: robots.txt
-    Disallow filtering — every page checked against its host's disallow
-    PREFIX rules (``rules``: one (host, prefix) row per directive),
-    ``blocked = 1`` iff any rule prefix-matches the canonical path.
-    The crawl-pipeline gate that runs before fetch/ingest; prefix-only
-    Disallow semantics (the original 1994 REP; Allow/longest-match
-    layering composes on top by the same shape with a priority agg).
-
-    Scale shape: canonicalization is a pure projection; the rule check
-    is one equi-join ON HOST with the rule table BROADCAST (robots
-    corpora are ~10⁶ rows — dwarfed by any crawl frontier), LEFT so
-    rule-less hosts pass through unblocked; per-key fan-out is bounded
-    by rules-per-host (a site's directive count, dozens not millions);
-    one map-side-combinable per-page aggregate collapses the matches.
-    Pages without a parseable host (no scheme) are never blocked —
-    robots applies to hosts."""
-    canon = canonicalize_urls(pages, url_col).select(
+    """``(doc_id, host, path)`` from canonical urls, lazily
+    ``localCheckpoint``ed: the one canonicalization a robots gate
+    needs, shared by the rule side (a caller deriving rules from the
+    crawl's own hosts) and the probe side of :func:`robots_match`.
+    Uncut, the regex chain (plus any url synthesis upstream) inlined
+    into the probe's per-page hash aggregate and the rules' host
+    distinct — "Code grows beyond 64 KB", and the stage silently ran
+    interpreted (with ``spark.sql.codegen.fallback=false`` the query
+    failed to compile)."""
+    return canonicalize_urls(pages, url_col).select(
         F.col(id_col).alias("doc_id"),
         "host",
         url_path(F.col("canonical_url")).alias("path"),
-    )
+    ).localCheckpoint(eager=False)
+
+
+def robots_match(paths: DataFrame, rules: DataFrame) -> DataFrame:
+    """:func:`robots_disallow` over a :func:`robots_paths` frame."""
     r = rules.select(
         F.col("host").alias("r_host"), F.col("prefix").alias("prefix")
     )
@@ -490,8 +484,8 @@ def robots_disallow(
         1,
     ).otherwise(0)
     return (
-        canon.join(
-            F.broadcast(r), canon["host"] == r["r_host"], "left"
+        paths.join(
+            F.broadcast(r), paths["host"] == r["r_host"], "left"
         )
         .groupBy("doc_id", "host", "path")
         .agg(
@@ -508,6 +502,32 @@ def robots_disallow(
             .alias("blocked"),
         )
     )
+
+
+def robots_disallow(
+    pages: DataFrame,
+    rules: DataFrame,
+    url_col: str = "url",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """``(doc_id, host, path, n_rules_matched, blocked)``: robots.txt
+    Disallow filtering — every page checked against its host's disallow
+    PREFIX rules (``rules``: one (host, prefix) row per directive),
+    ``blocked = 1`` iff any rule prefix-matches the canonical path.
+    The crawl-pipeline gate that runs before fetch/ingest; prefix-only
+    Disallow semantics (the original 1994 REP; Allow/longest-match
+    layering composes on top by the same shape with a priority agg).
+
+    Scale shape: canonicalization is a pure projection, cut once
+    (:func:`robots_paths`); the rule check is one equi-join ON HOST
+    with the rule table BROADCAST (robots corpora are ~10⁶ rows —
+    dwarfed by any crawl frontier), LEFT so rule-less hosts pass
+    through unblocked; per-key fan-out is bounded by rules-per-host (a
+    site's directive count, dozens not millions); one
+    map-side-combinable per-page aggregate collapses the matches.
+    Pages without a parseable host (no scheme) are never blocked —
+    robots applies to hosts."""
+    return robots_match(robots_paths(pages, url_col, id_col), rules)
 
 
 def scd2_intervals(

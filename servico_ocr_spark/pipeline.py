@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from functools import partial
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .boundary import map_documents
@@ -294,15 +295,23 @@ def write_analysis(analysis: DataFrame, path: str,
     writer.parquet(path)
 
 
+_NOTHING_COMMITTED = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+
+
 def resume_filter(
     spark: SparkSession, pages: DataFrame, output_path: str
 ) -> DataFrame:
     """Checkpoint/resume: drop pages whose url already has an output row
-    (left anti join — the J4 cache-hit pattern). Missing output dir means a
-    fresh run."""
+    (left anti join — the J4 cache-hit pattern). An output dir that does
+    not exist, or holds no committed data file (a first run that crashed
+    before its job commit leaves only ``_temporary``), means a fresh run.
+    Any other read failure — an unreadable or corrupt table — is raised:
+    treating it as empty would reprocess and append every page again."""
     try:
         done = spark.read.parquet(output_path).select("url")
-    except Exception:
+    except AnalysisException as exc:
+        if exc.getCondition() not in _NOTHING_COMMITTED:
+            raise
         return pages
     return pages.join(done, "url", "left_anti")
 

@@ -49,6 +49,24 @@ def test_query_matches_oracle(spark, duck, name):
     assert not problems, problems
 
 
+def test_robots_filter_compiles_without_codegen_fallback(spark, duck):
+    """With the interpreted fallback switched off, a stage whose
+    generated code does not compile fails the query instead of running
+    slowly and silently. robots_filter's uncut canonicalization once
+    inlined into its hash aggregate and failed here (Janino "Failed to
+    compile"); it must now compile and stay oracle-exact."""
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        spark_df = entrymod.queries()["robots_filter"](spark, SF).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    duck_df = duck.execute(entrymod.oracle_sql()["robots_filter"]).df()
+    problems = compare("robots_filter", spark_df, duck_df)
+    assert not problems, problems
+
+
 @pytest.mark.parametrize("name", sorted(_GOLDEN_QUERIES))
 def test_flagship_smoke(spark, name):
     fn = entrymod.queries()[name]

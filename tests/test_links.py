@@ -133,16 +133,6 @@ def test_pagerank_matches_python_reference_exactly(spark):
     assert got["d"] == 150000
 
 
-def test_pagerank_checkpoint_every_is_identity(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("a", "c")], "src string, dst string"
-    )
-    plain = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
-    chk = {r["node"]: r["rank"]
-           for r in pagerank(edges, checkpoint_every=2).collect()}
-    assert plain == chk
-
-
 def test_linked_fixture_every_rule_binds(spark):
     """Every adversarial branch of linked_pages_from_documents must have
     live rows at sf0.001 (FIXTURES.md), and the graph-level filters must
