@@ -36,7 +36,6 @@ from servico_ocr_spark.operators import (
     drop_repeated_paragraphs,
     exact_duplicates,
     extract_links,
-    extract_main_content,
     extract_media_features,
     language_id,
     link_degrees,
@@ -97,7 +96,7 @@ def _d_words_cte(tbl: str = "documents") -> str:
 
 def _q_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(_read(spark, sf_dir, "documents"))
-    analysis = run_extraction(pages, balance=True)
+    analysis = run_extraction(pages)
     return docs_table(analysis).select(
         "url", "paginas", "pagina_tipo", "qtd_letras", "qtd_palavras",
         F.length("extracted_text").alias("text_len"),
@@ -131,7 +130,7 @@ ORDER BY status
 
 def _q_extract_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(_read(spark, sf_dir, "documents"))
-    analysis = run_extraction(pages, balance=True)
+    analysis = run_extraction(pages)
     return (
         lineage_table(analysis)
         .groupBy("status")
@@ -165,7 +164,7 @@ def _q_extract_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     subset = docs.where(F.pmod(F.col("doc_id"), F.lit(11)).isin(5, 7))
     pages = pages_from_documents(subset)
-    analysis = run_extraction(pages, balance=True)
+    analysis = run_extraction(pages)
     extracted = docs_table(analysis).select(
         F.col("url").alias("doc_id"),
         F.col("extracted_text").alias("text"),
@@ -214,7 +213,7 @@ FROM mp GROUP BY jaccard_pct ORDER BY jaccard_pct
 
 def _q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = html_pages_from_documents(_read(spark, sf_dir, "documents"))
-    res = extract_main_content(pages)
+    res = web_analysis(pages)
     return res.select(
         "url",
         h48(F.col("main_text")).alias("main_h48"),
@@ -230,7 +229,7 @@ def _q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_html_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = html_pages_from_documents(_read(spark, sf_dir, "documents"))
-    res = extract_main_content(pages)
+    res = web_analysis(pages)
     return res.select(
         "url", F.posexplode("spans").alias("span_idx", "span")
     ).select(
@@ -266,7 +265,7 @@ _HB_MAX_DF = 5  # binds the entity fixture paragraph (df ≈ n/17) at every
 def _q_html_boilerplate_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = html_pages_from_documents(_read(spark, sf_dir, "documents"))
     cleaned = drop_repeated_paragraphs(
-        extract_main_content(pages), max_df=_HB_MAX_DF
+        web_analysis(pages), max_df=_HB_MAX_DF
     )
     return cleaned.select(
         "url",

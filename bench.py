@@ -452,34 +452,10 @@ def suite_names(requested: list[str] | None, qs: dict) -> list[str]:
 
 def run_suite(requested: list[str] | None = None) -> None:
     import __spark_entry__ as entrymod
-    from servico_ocr_spark.session import get_spark
 
-    spark = get_spark(
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-        app_name="servico-ocr-bench",
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-
-    # Steady-state measurement: each query runs once untimed (whole-stage
-    # codegen compile, JIT, Python-worker spin-up — per-query constants of
-    # ~1-4 s that a long-running job pays once, not per task), then the
-    # best of three timed runs is recorded (run-to-run variance on this
-    # box is ±20-30%; CLAUDE.md policy). Methodology in BENCH/BASELINE.md.
-    timings = {}
-    total = 0.0
-    for name in suite_names(requested, qs):
-        _materialize(qs[name](spark, SF_DIR))
-        best = float("inf")
-        for _ in range(3):
-            start = time.perf_counter()
-            _materialize(qs[name](spark, SF_DIR))
-            best = min(best, time.perf_counter() - start)
-        elapsed = round(best, 3)
-        timings[name] = elapsed
-        total += elapsed
-    spark.stop()
+    timings = _time_queries(
+        suite_names(requested, entrymod.queries()), "servico-ocr-bench")
+    total = sum(timings.values())
     families = {
         fam: round(sum(timings[q] for q in qs_in_fam if q in timings), 3)
         for fam, qs_in_fam in BENCH_FAMILIES.items()
@@ -699,7 +675,12 @@ def run_scaling_level(cores: int) -> None:
 
 
 def _time_queries(query_names: list[str], app_name: str) -> dict[str, float]:
-    """Suite-methodology timings (warm run + best-of-3) for named queries.
+    """Suite-methodology timings for named queries: each query runs once
+    untimed (whole-stage codegen compile, JIT, Python-worker spin-up —
+    per-query constants of ~1-4 s that a long-running job pays once, not
+    per task), then the best of three timed runs is recorded (run-to-run
+    variance on this box is ±20-30%; CLAUDE.md policy). Methodology in
+    BENCH/BASELINE.md.
 
     Imports ``__spark_entry__`` from whatever tree is FIRST on sys.path —
     the caller is responsible for pointing sys.path at the right checkout.

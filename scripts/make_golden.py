@@ -58,14 +58,13 @@ def golden_frames(
     carries the full extracted_text per ok url — the input table for
     oracles of queries that run DOWNSTREAM of extraction (extract_neardups
     computes minhash over it in SQL)."""
-    from servico_ocr_spark.pipeline import _error_row, analyze_page_row
+    from servico_ocr_spark.pipeline import analyze_page_row, document_row
 
     docs, lineage, texts = [], [], []
     for url, html in pages_rows:
-        try:
-            row = analyze_page_row(url, bytes(html))
-        except Exception as exc:  # mirrors the Spark error side-output
-            row = _error_row(url, exc)
+        # the Spark stage's own per-doc wrapper, errors routed to 'erro'
+        row = document_row(analyze_page_row, {
+            "url": url, "html": bytes(html), "partition_id": None})
         lineage.append(
             {"url": url, "status": row["status"], "est_pages": _est_pages(html)}
         )

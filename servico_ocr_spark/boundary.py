@@ -1,8 +1,8 @@
 """The one JVM↔Python boundary of the extraction faces.
 
-Both faces (OCR: ``pipeline.run_extraction``; web:
-``operators.webtext.extract_main_content``) run a pure per-document
-function over rows of a DataFrame. :func:`map_documents` is the only place
+``pipeline.extract`` runs both faces (OCR and web, ``pipeline.FACES``)
+through :func:`map_documents` with one per-document function,
+``pipeline.document_row`` around the face's kernel. This is the only place
 where they cross into Python: Arrow record batches in through
 ``mapInArrow``, one dict per document out, rebuilt into a record batch of
 the declared schema. No pandas on either side: a row is a plain dict, so

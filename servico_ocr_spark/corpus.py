@@ -181,7 +181,7 @@ def pages_from_documents(documents: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Real-HTML page synthesis (the north rule's web face; consumed by
-# operators/webtext.extract_main_content). Deterministic and *predictable in
+# operators/webtext.web_analysis). Deterministic and *predictable in
 # SQL*: the boilerplate is fixed markup, the main content is the document's
 # words regrouped into <p> blocks of _HTML_PARA_WORDS, so a DuckDB oracle
 # can reconstruct the expected extracted text exactly (__spark_entry__

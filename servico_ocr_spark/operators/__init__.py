@@ -45,8 +45,6 @@ from .similarity import (  # noqa: F401
 )
 from .webtext import (  # noqa: F401
     drop_repeated_paragraphs,
-    extract_main_content,
-    run_web_resumable,
     web_analysis,
     web_partition_metrics,
 )

@@ -1,13 +1,19 @@
-"""The extraction pipeline: pages → (docs, boxes, lineage).
+"""The extraction runner of both faces: pages → one analysis row per page.
+
+A face (:class:`Face`) is data: a per-document kernel ``(url, html) →
+dict``, an output schema, and whether its rows are balanced first. OCR
+(:func:`analyze_page_row`, ANALYSIS_SCHEMA) is; web (:func:`web_page_row`,
+WEB_ANALYSIS_SCHEMA) is not. :func:`extract` runs either, and everything
+around the kernel is written once: staging, the one Arrow boundary, error
+and lineage columns (:func:`document_row`), resume and the write.
 
 Spark-first design notes (this is where the 100 TB story lives):
 
-* **Zero-shuffle core.** One input row = one document, and every analysis
-  stage (assembly → enrichment → classification → ordering → render) is
-  per-document, so the whole pipeline is a single ``mapInArrow`` over the
-  scan (``boundary.map_documents``) — no groupBy, no join, no shuffle in
-  the hot path. The reference's process-pool fan-out (app/util_fila.py)
-  becomes plain Spark task parallelism.
+* **One boundary.** One input row = one document, and every analysis
+  stage is per-document, so each face is a single ``mapInArrow`` over the
+  scan (``boundary.map_documents``) — no groupBy or join in the hot path.
+  The reference's process-pool fan-out (app/util_fila.py) becomes plain
+  Spark task parallelism.
 * **Skew.** Catalyst can't see document weight inside the UDF, so weight is
   handled in data space: a cheap page-count estimate is parsed from the
   payload header JVM-side, and :func:`weighted_repartition` spreads heavy
@@ -20,17 +26,22 @@ Spark-first design notes (this is where the 100 TB story lives):
   append. Re-running after a crash never duplicates and never recomputes
   finished documents (J4 — the cache-hit anti-join of
   app/app_controller.py:77-79 is the same pattern).
-* **Error isolation.** A corrupt document (junk bytes, Faixa-geometry crash)
-  produces a lineage row with status='erro' and the reference error message
-  pattern (app/util_processar_pasta.py:412-421) instead of failing the job.
+* **Lineage and error isolation.** Every row carries ``partition_id``
+  (the task that ran the kernel), ``status``, ``error`` and ``dthr``. A
+  document whose kernel raises (junk bytes, Faixa-geometry crash)
+  produces a status='erro' row with the reference error message
+  (app/util_processar_pasta.py:412-421) instead of failing the job.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
 from functools import partial
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
 from .boundary import map_documents
 from .core.analyze import (
@@ -38,10 +49,13 @@ from .core.analyze import (
     assemble_text,
     document_stats,
 )
+from .core.html_extract import extract_main
 from .core.render import filter_regions, render_html, render_markdown
 from .core.tokenizer import document_tokens
 from .corpus import parse_payload
-from .schemas import ANALYSIS_SCHEMA, DOCS_COLUMNS, LINEAGE_COLUMNS
+from .schemas import (
+    ANALYSIS_SCHEMA, DOCS_COLUMNS, LINEAGE_COLUMNS, WEB_ANALYSIS_SCHEMA,
+)
 
 JOB_TS = "2026-01-01 00:00:00"  # deterministic dthr (reference X8 format)
 HEAVY_PAGE_THRESHOLD = 8
@@ -49,8 +63,8 @@ HEAVY_PAGE_THRESHOLD = 8
 
 def analyze_page_row(url: str, html: bytes, renders: bool = True):
     """Pure per-document analysis used by both the Spark stage and the
-    pytest oracle. Returns a dict matching ANALYSIS_SCHEMA (minus
-    partition_id / est_pages).
+    pytest oracle; the OCR face's kernel. Returns a dict matching
+    ANALYSIS_SCHEMA minus the lineage columns.
 
     ``renders=False`` skips the md/html render strings (columns stay in
     the schema as NULL). The renders roughly double per-document output
@@ -88,42 +102,60 @@ def analyze_page_row(url: str, html: bytes, renders: bool = True):
     }
 
 
-def _error_row(url: str, exc: Exception) -> dict:
-    # reference error status: f'Erro: {msg[:30]}...'
-    # (app/util_processar_pasta.py:418)
-    msg = str(exc)
-    return {
-        "url": url,
-        "status": "erro",
-        "error": f"Erro: {msg[:30]}..." if len(msg) > 30 else f"Erro: {msg}",
-        "paginas": None,
-        "n_boxes": None,
-        "mean_conf": None,
-        "qtd_letras": None,
-        "qtd_palavras": None,
-        "pagina_tipo": None,
-        "extracted_text": None,
-        "clean_text": None,
-        "md": None,
-        "html_render": None,
-        "spans": None,
-        "boxes": None,
-    }
+def web_page_row(url: str, html: bytes) -> dict:
+    """The web face's kernel: ``core.html_extract.extract_main`` in the
+    shape of WEB_ANALYSIS_SCHEMA. Total: corrupt bytes decode with
+    replacement and the parser never raises."""
+    r = extract_main(html)
+    r["spans"] = [{"start": start, "end": end} for start, end in r["spans"]]
+    return r
 
 
-def _analyze_row(row: dict, renders: bool = True) -> dict:
-    """Per-document kernel of :func:`run_extraction`: one staged row
-    (url, html, est_pages, partition_id) → one ANALYSIS_SCHEMA row. All
-    token/box work inside is per-doc pure Python over tiny in-memory lists,
-    exactly like one reference worker task."""
+@dataclass(frozen=True)
+class Face:
+    """What differs between the extraction faces — data, not a code path.
+
+    ``kernel(url, html)`` returns one document's output columns and may
+    raise; ``schema`` is the output row (kernel columns plus lineage);
+    ``balanced`` routes the rows through :func:`with_page_estimate` and
+    :func:`weighted_repartition` first. The web face is not balanced, so
+    its plan has no exchange (HTML bytes per page vary ~10², not the 10⁴
+    of multipage PDFs)."""
+
+    kernel: Callable[[str, bytes], dict]
+    schema: StructType
+    balanced: bool
+
+
+FACES = {
+    "ocr": Face(analyze_page_row, ANALYSIS_SCHEMA, balanced=True),
+    "web": Face(web_page_row, WEB_ANALYSIS_SCHEMA, balanced=False),
+}
+
+
+def document_row(kernel: Callable[[str, bytes], dict], row: dict) -> dict:
+    """The per-document wrapper of every face: one staged row (url, html,
+    partition_id[, est_pages]) → one output row with the lineage columns.
+    A kernel that raises yields a ``status='erro'`` row with the
+    reference error message (app/util_processar_pasta.py:412-421) and
+    NULL outputs instead of failing the job."""
     url = row["url"]
     try:
-        out = analyze_page_row(url, row["html"], renders=renders)
-    except Exception as exc:  # error side-output, never fail the job
-        out = _error_row(url, exc)
+        out = kernel(url, row["html"])
+        out["status"] = "ok"
+    except Exception as exc:
+        # reference error status: f'Erro: {msg[:30]}...'
+        # (app/util_processar_pasta.py:418)
+        msg = str(exc)
+        if len(msg) > 30:
+            msg = msg[:30] + "..."
+        out = {"status": "erro", "error": f"Erro: {msg}"}
+    # the schemas declare url non-null, so a null url fails the task
+    # loudly instead of writing a keyless row
+    out["url"] = url
     out["partition_id"] = row["partition_id"]
+    out["est_pages"] = row.get("est_pages")
     out["dthr"] = JOB_TS
-    out["est_pages"] = row["est_pages"]
     return out
 
 
@@ -231,33 +263,48 @@ def weighted_repartition(
     return salted.repartition(num_partitions, "_pk").drop("_pk")
 
 
+def extract(
+    pages: DataFrame, face: Face, num_partitions: int | None = None
+) -> DataFrame:
+    """The one extraction runner: pages → one ``face.schema`` row per page.
+
+    Selects ``(url, html)``, balances when the face asks for it (into
+    ``num_partitions``, default the session's parallelism), tags each row
+    with ``partition_id`` and crosses into Python once through
+    :func:`boundary.map_documents` with :func:`document_row` around the
+    face's kernel. Lazy apart from the one-time salt-table probe in
+    :func:`weighted_repartition` (tiny, memoized per partition count)."""
+    staged = pages.select("url", "html")
+    if face.balanced:
+        staged = weighted_repartition(
+            with_page_estimate(staged), num_partitions=num_partitions
+        )
+    # evaluated in the kernel's own task (no exchange in between), so it
+    # names the task that ran the kernel on the row
+    staged = staged.withColumn("partition_id", F.spark_partition_id())
+    return map_documents(
+        staged, partial(document_row, face.kernel), face.schema
+    )
+
+
 def run_extraction(
     pages: DataFrame,
     num_partitions: int | None = None,
-    balance: bool = True,
     renders: bool = True,
 ) -> DataFrame:
-    """pages → analysis DataFrame (one row per document, ANALYSIS_SCHEMA).
-
-    Lazy apart from the one-time salt-table probe in
-    :func:`weighted_repartition` (tiny, memoized per partition count);
-    callers split the result into docs/boxes/lineage with the selectors
-    below or write it once with :func:`write_analysis`.
+    """The OCR face: pages → analysis DataFrame (ANALYSIS_SCHEMA); callers
+    split it into docs/boxes/lineage with the selectors below or write it
+    once with :func:`write_analysis`.
 
     ``renders=False`` leaves the md/html_render columns NULL (same
     schema): skips the per-doc render compute AND roughly halves the
     Arrow/output bytes per document — the lever for text-only consumers
     (see :func:`analyze_page_row`).
     """
-    staged = with_page_estimate(pages.select("url", "html"))
-    if balance:
-        staged = weighted_repartition(staged, num_partitions=num_partitions)
-    # evaluated in the kernel's own task (no exchange in between), so it
-    # names the task that analyzed the row
-    staged = staged.withColumn("partition_id", F.spark_partition_id())
-    return map_documents(
-        staged, partial(_analyze_row, renders=renders), ANALYSIS_SCHEMA
-    )
+    face = FACES["ocr"]
+    if not renders:
+        face = replace(face, kernel=partial(analyze_page_row, renders=False))
+    return extract(pages, face, num_partitions)
 
 
 def docs_table(analysis: DataFrame) -> DataFrame:
@@ -277,22 +324,23 @@ def lineage_table(analysis: DataFrame) -> DataFrame:
     return analysis.select(*LINEAGE_COLUMNS)
 
 
-def write_analysis(analysis: DataFrame, path: str,
-                   url_buckets: int | None = None) -> None:
-    """Idempotent append of the combined analysis table (Iceberg-style:
-    partitioned parquet append; swap for ``writeTo(...).append()`` when an
-    Iceberg catalog is configured).
+def write_analysis(analysis: DataFrame, path: str) -> None:
+    """Append the analysis table to ``path`` (Iceberg-style parquet
+    append; swap for ``writeTo(...).append()`` when an Iceberg catalog is
+    configured).
 
-    ``url_buckets`` adds a bucket(url) partition column — the 10^12-doc
-    layout: resume anti-joins and point lookups prune to one bucket
-    directory instead of scanning the table."""
-    writer = analysis.write.mode("append")
-    if url_buckets:
-        analysis = analysis.withColumn(
-            "url_bucket", F.pmod(F.xxhash64("url"), F.lit(url_buckets))
-        )
-        writer = analysis.write.mode("append").partitionBy("url_bucket")
-    writer.parquet(path)
+    Assumes one writer per table, as the resume anti-join before it does.
+    A job that crashed before its job commit leaves committed tasks under
+    ``<path>/_temporary``; Hadoop's committer would publish them with this
+    append (duplicating rows), and a bare file there makes it delete the
+    output directory. Nothing under it was ever published, so its urls
+    are not in the committed table: delete it first and reprocess them."""
+    spark = analysis.sparkSession
+    temporary = spark._jvm.org.apache.hadoop.fs.Path(path, "_temporary")
+    temporary.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
+        temporary, True
+    )
+    analysis.write.mode("append").parquet(path)
 
 
 _NOTHING_COMMITTED = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
@@ -321,9 +369,10 @@ def run_resumable(
     pages: DataFrame,
     output_path: str,
     num_partitions: int | None = None,
+    face: str = "ocr",
 ) -> None:
-    """Checkpointed, resumable batch run: anti-join processed → analyze →
-    append. Safe to re-run after a crash; every url is written exactly once.
-    """
+    """Checkpointed, resumable batch run of one face (``"ocr"`` or
+    ``"web"``): anti-join processed → extract → append. Safe to re-run
+    after a crash; every url is written exactly once."""
     todo = resume_filter(spark, pages, output_path)
-    write_analysis(run_extraction(todo, num_partitions=num_partitions), output_path)
+    write_analysis(extract(todo, FACES[face], num_partitions), output_path)

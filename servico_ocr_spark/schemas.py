@@ -102,6 +102,33 @@ ANALYSIS_SCHEMA = StructType(
     ]
 )
 
+# One row per page out of the web face (core/html_extract.extract_main),
+# with the same lineage columns as ANALYSIS_SCHEMA. The kernel is total, so
+# ``error`` stays NULL.
+WEB_ANALYSIS_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("main_text", StringType(), True),
+        StructField("spans", ArrayType(StructType([
+            StructField("start", IntegerType(), False),
+            StructField("end", IntegerType(), False),
+        ])), True),
+    ]
+    + [
+        StructField(name, LongType(), True)
+        for name in (
+            "n_blocks", "n_kept", "n_dropped_link", "n_links",
+            "main_chars", "main_words",
+        )
+    ]
+    + [
+        StructField("partition_id", IntegerType(), True),
+        StructField("status", StringType(), False),
+        StructField("error", StringType(), True),
+        StructField("dthr", StringType(), True),
+    ]
+)
+
 DOCS_COLUMNS = [
     "url", "paginas", "pagina_tipo", "extracted_text", "clean_text",
     "spans", "mean_conf", "qtd_letras", "qtd_palavras", "md", "html_render",

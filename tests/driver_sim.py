@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+from typing import NamedTuple
 
 import duckdb
 import pandas as pd
@@ -53,38 +54,57 @@ def _dtype_family(s: pd.Series) -> str:
     return "int" if k in "iu" else ("float" if k == "f" else "other")
 
 
-def compare(name, spark_df, duck_df) -> list:
-    problems = []
+class Problem(NamedTuple):
+    """One difference ``compare`` found: ``kind`` is ``columns``,
+    ``dtype_family``, ``rows`` or ``values``."""
+
+    kind: str
+    message: str
+
+
+def schema_match(problems: list[Problem]) -> bool:
+    """The gate's ``schema_match``: no ``columns`` or ``dtype_family``
+    problem (the two kinds the driver's schema check would see)."""
+    return not any(p.kind in ("columns", "dtype_family") for p in problems)
+
+
+def compare(name, spark_df, duck_df) -> list[Problem]:
     if sorted(spark_df.columns) != sorted(duck_df.columns):
-        problems.append(
+        return [Problem(
+            "columns",
             f"columns differ: spark={sorted(spark_df.columns)} "
-            f"duck={sorted(duck_df.columns)}"
-        )
-        return problems
+            f"duck={sorted(duck_df.columns)}",
+        )]
     # dtype-strict: the driver hashes rendered values, so an int64 Spark
     # column vs a float64 oracle column (e.g. DuckDB sum(BIGINT) returning
     # HUGEINT -> float64) hash-mismatches even when values are equal.
     # normalize() below would mask that; flag it here first.
-    for c in sorted(spark_df.columns):
-        fa, fb = _dtype_family(spark_df[c]), _dtype_family(duck_df[c])
-        if {fa, fb} == {"int", "float"}:
-            problems.append(
-                f"dtype family mismatch in {c}: spark={spark_df[c].dtype} "
-                f"duck={duck_df[c].dtype} (driver hash sees int vs float)"
-            )
+    problems = [
+        Problem(
+            "dtype_family",
+            f"dtype family mismatch in {c}: spark={spark_df[c].dtype} "
+            f"duck={duck_df[c].dtype} (driver hash sees int vs float)",
+        )
+        for c in sorted(spark_df.columns)
+        if {_dtype_family(spark_df[c]), _dtype_family(duck_df[c])}
+        == {"int", "float"}
+    ]
     if problems:
         return problems
     if len(spark_df) != len(duck_df):
-        problems.append(f"row count: spark={len(spark_df)} duck={len(duck_df)}")
+        problems.append(Problem(
+            "rows", f"row count: spark={len(spark_df)} duck={len(duck_df)}"))
     a, b = normalize(spark_df.copy()), normalize(duck_df.copy())
     if len(a) == len(b) and not a.equals(b):
         diff_cols = [c for c in a.columns if not a[c].equals(b[c])]
-        problems.append(f"values differ in columns {diff_cols}")
+        problems.append(
+            Problem("values", f"values differ in columns {diff_cols}"))
         for c in diff_cols[:2]:
             neq = a[c] != b[c]
             idx = neq[neq].index[:3]
             for i in idx:
-                problems.append(f"  {c}[{i}]: spark={a[c][i]!r} duck={b[c][i]!r}")
+                problems.append(Problem("values", f"  {c}[{i}]: "
+                                        f"spark={a[c][i]!r} duck={b[c][i]!r}"))
     return problems
 
 
@@ -170,12 +190,10 @@ def run_gate(spark, sf_dir: str, only: set[str] | None = None,
         rec["oracle_rows"] = len(ddf)
         problems = compare(name, spdf, ddf)
         rec["rows_match"] = len(spdf) == len(ddf)
-        rec["schema_match"] = not any(
-            "columns differ" in p or "dtype family" in p for p in problems
-        )
+        rec["schema_match"] = schema_match(problems)
         rec["hash_match"] = not problems
         if problems:
-            rec["err"] = "; ".join(problems[:5])
+            rec["err"] = "; ".join(p.message for p in problems[:5])
             say(f"[FAIL] {name}: {rec['err']}")
         else:
             say(f"[ ok ] {name}: {len(spdf)} rows match")

@@ -1,6 +1,6 @@
 """Edge cases of the extraction faces' one Arrow boundary
-(``boundary.map_documents``), for the OCR face (``pipeline.run_extraction``)
-and the web face (``webtext.extract_main_content``)."""
+(``boundary.map_documents``) and of the per-document wrapper around it
+(``pipeline.document_row``), for both faces of ``pipeline.extract``."""
 
 from functools import partial
 
@@ -9,14 +9,13 @@ import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from servico_ocr_spark.boundary import documents_kernel
-from servico_ocr_spark.operators.webtext import (
-    MAIN_CONTENT_SCHEMA,
-    _main_content_row,
-    extract_main_content,
+from servico_ocr_spark.corpus import build_corpus, html_pages_from_documents
+from servico_ocr_spark.pipeline import (
+    FACES, JOB_TS, document_row, extract, run_extraction,
 )
-from servico_ocr_spark.pipeline import _analyze_row, run_extraction
-from servico_ocr_spark.schemas import ANALYSIS_SCHEMA
+from servico_ocr_spark.schemas import ANALYSIS_SCHEMA, PAGES_SCHEMA
 
+SF = "/root/testdata/sf0.001"
 CORRUPT = [
     (f"https://example.test/corrupt/{i}", bytes([0, 255, 26, i, 0]))
     for i in range(3)
@@ -25,22 +24,19 @@ LIST_AND_STRUCT_COLS = [
     f.name for f in ANALYSIS_SCHEMA.fields
     if f.dataType.typeName() in ("array", "struct")
 ]
+LINEAGE = ["partition_id", "status", "error", "dthr"]
 
-ocr_kernel = partial(
-    documents_kernel, per_doc=_analyze_row,
-    schema=to_arrow_schema(ANALYSIS_SCHEMA),
-)
-web_kernel = partial(
-    documents_kernel,
-    per_doc=partial(_main_content_row, url_col="url", html_col="html",
-                    min_words=0),
-    schema=to_arrow_schema(MAIN_CONTENT_SCHEMA),
-)
+
+def _kernel(face):
+    return partial(
+        documents_kernel, per_doc=partial(document_row, FACES[face].kernel),
+        schema=to_arrow_schema(FACES[face].schema),
+    )
 
 
 def test_all_corrupt_partition_gives_null_error_rows(spark):
     pages = spark.createDataFrame(CORRUPT, "url string, html binary")
-    out = run_extraction(pages, balance=False)
+    out = run_extraction(pages.coalesce(1), num_partitions=1)
     assert out.schema == ANALYSIS_SCHEMA
     rows = out.collect()
     assert [r["status"] for r in rows] == ["erro"] * len(CORRUPT)
@@ -48,9 +44,9 @@ def test_all_corrupt_partition_gives_null_error_rows(spark):
         assert all(r[name] is None for name in LIST_AND_STRUCT_COLS)
 
 
-@pytest.mark.parametrize("kernel", [ocr_kernel, web_kernel],
-                         ids=["ocr", "web"])
-def test_empty_partition_yields_no_batch(kernel):
+@pytest.mark.parametrize("face", ["ocr", "web"])
+def test_empty_partition_yields_no_batch(face):
+    kernel = _kernel(face)
     empty = pa.RecordBatch.from_pylist(
         [{"url": "u", "html": b"x", "est_pages": 1, "partition_id": 0}]
     ).slice(0, 0)
@@ -64,7 +60,52 @@ def test_null_url_fails_the_task(spark, face):
         [("https://example.test/ok", b"<p>x</p>"), (None, b"<p>y</p>")],
         "url string, html binary",
     )
-    out = (run_extraction(pages, balance=False) if face == "ocr"
-           else extract_main_content(pages))
     with pytest.raises(Exception, match="NullPointerException"):
-        out.collect()
+        extract(pages, FACES[face]).collect()
+
+
+@pytest.mark.parametrize("face", ["ocr", "web"])
+def test_raising_kernel_gives_erro_row_with_reference_message(face):
+    """The shared wrapper routes a kernel's exception to a ``status='erro'``
+    row with the reference message (``Erro: {msg[:30]}...``) and NULL
+    outputs; the row fits the face's schema."""
+
+    def boom(url, html):
+        raise ValueError("x" * 40 if url.endswith("long") else "bad page")
+
+    rows = [
+        document_row(boom, {"url": f"https://example.test/{tail}",
+                            "html": b"", "partition_id": 3})
+        for tail in ("short", "long")
+    ]
+    assert [r["error"] for r in rows] == ["Erro: bad page",
+                                          f"Erro: {'x' * 30}..."]
+    batch = pa.RecordBatch.from_pylist(
+        rows, schema=to_arrow_schema(FACES[face].schema))
+    for r in batch.to_pylist():
+        lineage = (r["status"], r["partition_id"], r["dthr"])
+        assert lineage == ("erro", 3, JOB_TS)
+        outputs = set(r) - {"url", *LINEAGE}
+        assert all(r[c] is None for c in outputs)
+
+
+def test_both_faces_write_the_same_lineage(spark, tmp_path):
+    """Both faces carry the lineage columns with one type each and the
+    same constant ``dthr``; ``partition_id`` names a task of the run."""
+    pages = {
+        "ocr": spark.createDataFrame(build_corpus(8), schema=PAGES_SCHEMA),
+        "web": html_pages_from_documents(
+            spark.read.parquet(f"{SF}/documents.parquet").limit(8)),
+    }
+    lineage = {}
+    for face, df in pages.items():
+        out = str(tmp_path / face)
+        extract(df, FACES[face], num_partitions=2).write.parquet(out)
+        table = spark.read.parquet(out)
+        lineage[face] = (
+            [(c, table.schema[c].dataType) for c in LINEAGE],
+            {r["dthr"] for r in table.select("dthr").collect()},
+        )
+        assert {r["partition_id"] for r in table.collect()} <= {0, 1}
+    assert lineage["ocr"] == lineage["web"]
+    assert lineage["ocr"][1] == {JOB_TS}

@@ -14,7 +14,7 @@ from servico_ocr_spark.core.html_extract import extract_blocks, extract_main
 from servico_ocr_spark.corpus import html_pages_from_documents
 from servico_ocr_spark.operators.webtext import (
     drop_repeated_paragraphs,
-    extract_main_content,
+    web_analysis,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -250,7 +250,7 @@ def test_operator_matches_kernel_any_partitioning(spark):
     pages_pdf = pages.toPandas()
     expected = _expected_rows(pages_pdf)
     for n_parts in (1, 7):
-        res = extract_main_content(pages.repartition(n_parts)).collect()
+        res = web_analysis(pages.repartition(n_parts)).collect()
         got = sorted(
             (r["url"], r["main_text"],
              [(s["start"], s["end"]) for s in r["spans"]], r["n_blocks"],
@@ -262,7 +262,7 @@ def test_operator_matches_kernel_any_partitioning(spark):
 
 def test_fixture_subsets_behave(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    res = extract_main_content(html_pages_from_documents(docs)).withColumn(
+    res = web_analysis(html_pages_from_documents(docs)).withColumn(
         "doc_id",
         F.regexp_extract("url", "([0-9]+)$", 1).cast("long"),
     )
@@ -292,16 +292,16 @@ def test_fixture_subsets_behave(spark):
 
 
 def test_html_face_resume_idempotence(spark, tmp_path):
-    """The checkpointed web-face runner (run_web_resumable) gives
-    exactly-once rows per url with lineage columns: half run → full run
-    → re-run, counts go 20 → 40 → 40."""
-    from servico_ocr_spark.operators.webtext import run_web_resumable
+    """The checkpointed runner on the web face gives exactly-once rows
+    per url with lineage columns: half run → full run → re-run, counts go
+    20 → 40 → 40."""
+    from servico_ocr_spark.pipeline import run_resumable
 
     out = str(tmp_path / "html_out")
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(40)
     pages = html_pages_from_documents(docs)
     for batch, expected in ((pages.limit(20), 20), (pages, 40), (pages, 40)):
-        run_web_resumable(spark, batch, out)
+        run_resumable(spark, batch, out, face="web")
         res = spark.read.parquet(out)
         assert res.count() == expected
         assert res.select("url").distinct().count() == expected
@@ -314,9 +314,7 @@ def test_web_partition_metrics_tile_corpus(spark):
     """Per-partition lineage metrics: one row per executed partition, and
     the partition sums reconstruct the corpus totals exactly at any
     partitioning."""
-    from servico_ocr_spark.operators.webtext import (
-        web_analysis, web_partition_metrics,
-    )
+    from servico_ocr_spark.operators.webtext import web_partition_metrics
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
     pages = html_pages_from_documents(docs)
@@ -387,7 +385,7 @@ def test_paragraph_dedup_metachar_separator_is_literal(spark):
 def test_paragraph_dedup_drops_entity_fixture_corpus_wide(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     cleaned = drop_repeated_paragraphs(
-        extract_main_content(html_pages_from_documents(docs)), max_df=5
+        web_analysis(html_pages_from_documents(docs)), max_df=5
     ).withColumn(
         "doc_id", F.regexp_extract("url", "([0-9]+)$", 1).cast("long")
     )
@@ -405,7 +403,7 @@ def test_paragraph_dedup_single_input_pass_no_join(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(
         drop_repeated_paragraphs(
-            extract_main_content(html_pages_from_documents(docs)), max_df=5
+            web_analysis(html_pages_from_documents(docs)), max_df=5
         )
     )
     # the kernel must run ONCE (a restoring join would re-execute it just
@@ -426,7 +424,7 @@ def _plan(df) -> str:
 
 def test_html_extract_plan_shuffle_free_and_pruned(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(extract_main_content(html_pages_from_documents(docs)))
+    plan = _plan(web_analysis(html_pages_from_documents(docs)))
     assert "Exchange" not in plan  # no shuffle anywhere in the operator
     assert plan.count("MapInArrow") == 1  # exactly one Python boundary
     scan = next(line for line in plan.splitlines() if "FileScan" in line)

@@ -382,22 +382,6 @@ def test_media_decode_stub_raises(spark):
         extract_media_features(media, decode_stub="raise").collect()
 
 
-def test_write_analysis_bucketed(spark, tmp_path):
-    from servico_ocr_spark.corpus import build_corpus
-    from servico_ocr_spark.pipeline import run_extraction, write_analysis
-    from servico_ocr_spark.schemas import PAGES_SCHEMA
-
-    pages = spark.createDataFrame(build_corpus(12), schema=PAGES_SCHEMA)
-    out = str(tmp_path / "bucketed")
-    write_analysis(run_extraction(pages, num_partitions=2), out, url_buckets=4)
-    df = spark.read.parquet(out)
-    assert df.count() == 12
-    assert "url_bucket" in df.columns
-    # partition pruning: a bucket filter scans a subset of files
-    one = df.where("url_bucket = 1")
-    assert one.count() < 12
-
-
 def test_color_mode_classification(spark):
     from servico_ocr_spark.operators.multimodal import classify_color_mode
 

@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from servico_ocr_spark.corpus import pages_from_documents
+from servico_ocr_spark.corpus import (
+    html_pages_from_documents, pages_from_documents,
+)
 from servico_ocr_spark.pipeline import run_extraction
 
 SF = "/root/testdata/sf0.001"
@@ -32,12 +34,22 @@ def test_extraction_has_single_shuffle_only_for_balance(spark):
     pages = pages_from_documents(
         spark.read.parquet(f"{SF}/documents.parquet")
     )
-    unbalanced = _plan(run_extraction(pages, balance=False))
-    assert "Exchange" not in unbalanced  # zero-shuffle hot path
-    balanced = _plan(run_extraction(pages, balance=True))
+    plan = _plan(run_extraction(pages))
     # exactly two exchanges: the heavy-rank window and the balance
     # repartition itself — nothing else may shuffle
-    assert balanced.count("Exchange hashpartitioning") == 2
+    assert plan.count("Exchange hashpartitioning") == 2
+    assert plan.count("MapInArrow") == 1
+
+
+def test_web_face_plan_has_no_exchange(spark):
+    from servico_ocr_spark.operators.webtext import web_analysis
+
+    pages = html_pages_from_documents(
+        spark.read.parquet(f"{SF}/documents.parquet")
+    )
+    plan = _plan(web_analysis(pages))
+    assert "Exchange" not in plan  # the web face is not balanced
+    assert plan.count("MapInArrow") == 1
 
 
 def test_filter_pushdown_pricing(spark):
@@ -86,23 +98,6 @@ def test_rollup_single_expand_no_extra_shuffle(spark):
     # regrouping per grouping set would shuffle once per set
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Expand" in plan
-
-
-def test_bucketed_write_prunes_partitions(spark, tmp_path):
-    """The 10^12-doc layout: url-bucket partitioned output must let a
-    point lookup prune to one bucket directory instead of scanning all."""
-    from servico_ocr_spark.corpus import build_corpus
-    from servico_ocr_spark.pipeline import run_extraction, write_analysis
-    from servico_ocr_spark.schemas import PAGES_SCHEMA
-
-    pages = spark.createDataFrame(build_corpus(16), schema=PAGES_SCHEMA)
-    out = str(tmp_path / "bucketed")
-    write_analysis(run_extraction(pages, num_partitions=4), out,
-                   url_buckets=8)
-    lookup = spark.read.parquet(out).where(F.col("url_bucket") == 3)
-    plan = _plan(lookup)
-    scan = next(line for line in plan.splitlines() if "FileScan" in line)
-    assert "PartitionFilters" in scan and "url_bucket" in scan
 
 
 def test_no_row_at_a_time_python_anywhere(spark):
