@@ -2603,9 +2603,11 @@ def _warc_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC container parsing (sources/warc.read_warc_records):
     Content-Length-framed record splitting of concatenated WARC blobs
-    inside one Arrow-batched mapInPandas — the Common-Crawl ingest
-    step. The oracle never parses: the fixture's bytes are exact
-    arithmetic over ``documents`` (html-face discipline), so the hash
+    through the one Arrow boundary (``boundary.map_documents``, each
+    blob's records fanned out to rows by ``inline`` in the JVM) — the
+    Common-Crawl ingest step. The oracle never parses: the fixture's
+    bytes are exact arithmetic over ``documents`` (html-face
+    discipline), so the hash
     check proves the parser inverts the framing bit-for-bit (urls,
     timestamps, Content-Length, payload bytes)."""
     from servico_ocr_spark.sources.warc import read_warc_records
@@ -5817,8 +5819,9 @@ def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-stride sampling (operators/multimodal.
-    sample_frames): one-row-in / ≤4-frames-out mapInPandas fan-out
-    over the video third of the synthetic media table; decode stubbed
+    sample_frames): one-row-in / ≤4-frames-out fan-out (an array column
+    from ``boundary.map_documents``, ``inline`` in the JVM) over the
+    video third of the synthetic media table; decode stubbed
     deterministically (frame count from payload length, frame digest
     from payload‖idx) so the SQL oracle replays it exactly while the
     Spark side runs the real Arrow plumbing."""

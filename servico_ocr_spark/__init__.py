@@ -8,9 +8,9 @@ Architecture (Spark-first, NOT a port):
   Catalyst/AQE handle pushdown, pruning, broadcast and skew.
 - Everything *per-document* (token→box assembly, enrichment, classification,
   reading order, rendering) runs as a pure-Python kernel inside a single
-  ``mapInArrow`` stage (``boundary.map_documents``, shared by the OCR and
-  web faces) — one input row is one document, so the whole extraction
-  pipeline needs **zero shuffles**.
+  ``mapInArrow`` stage (``boundary.map_documents``, the one Python
+  boundary of every stage outside ``streaming/``) — one input row is one
+  document, so the whole extraction pipeline needs **zero shuffles**.
 - The OCR engine itself is a pluggable ``TokenSource`` boundary
   (reference: pytesseract call at app/util_ocr.py:102); this sandbox ships a
   deterministic synthetic tokenizer so tests need no binaries.

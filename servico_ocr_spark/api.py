@@ -17,11 +17,12 @@ workflow:
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
+from .boundary import map_documents
 from .core.render import filter_regions, render_html, render_markdown
 from .pipeline import resume_filter, run_extraction, write_analysis
 
@@ -97,22 +98,17 @@ def parallel_map(
     """
     import json
 
-    pdf = pd.DataFrame({"i": range(len(values)),
-                        "v": [json.dumps(v) for v in values]})
-    df = spark.createDataFrame(pdf)
+    df = spark.createDataFrame(
+        [(i, json.dumps(v)) for i, v in enumerate(values)], "i long, v string"
+    )
     if num_partitions:
         df = df.repartition(num_partitions)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "i": batch["i"],
-                    "r": [json.dumps(fn(json.loads(v))) for v in batch["v"]],
-                }
-            )
+    def per_value(row: dict) -> dict:
+        return {"i": row["i"], "r": json.dumps(fn(json.loads(row["v"])))}
 
-    out = df.mapInPandas(kernel, schema="i long, r string").collect()
+    out = map_documents(
+        df, per_value, StructType.fromDDL("i long, r string")).collect()
     return [json.loads(r["r"]) for r in sorted(out, key=lambda r: r["i"])]
 
 

@@ -1,13 +1,20 @@
-"""The one JVM↔Python boundary of the extraction faces.
+"""The one JVM↔Python boundary outside ``streaming/``.
 
-``pipeline.extract`` runs both faces (OCR and web, ``pipeline.FACES``)
-through :func:`map_documents` with one per-document function,
-``pipeline.document_row`` around the face's kernel. This is the only place
-where they cross into Python: Arrow record batches in through
-``mapInArrow``, one dict per document out, rebuilt into a record batch of
-the declared schema. No pandas on either side: a row is a plain dict, so
-list and struct columns go straight between Arrow and the kernel's own
+Every Python stage of the engine crosses into Python through
+:func:`map_documents`: Arrow record batches in through ``mapInArrow``, one
+dict per input row out, rebuilt into a record batch of the declared
+schema. No pandas on either side: a row is a plain dict, so list and
+struct columns go straight between Arrow and the per-row function's own
 lists and dicts.
+
+``pipeline.extract`` runs both extraction faces (OCR and web,
+``pipeline.FACES``) through it with ``pipeline.document_row`` around the
+face's kernel. A stage that emits zero or several rows per input row
+returns them as one ``array<struct>`` column and ends in
+``.select(key, F.inline(col))``, so the fan-out happens in the JVM
+(``sources.warc.read_warc_records``, ``operators.multimodal.sample_frames``);
+a NULL or empty array gives no rows. A stage that skips rows filters them
+in the JVM before the boundary.
 """
 
 from __future__ import annotations

@@ -1,12 +1,14 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a metadata struct; the
-heavy decode/feature kernels run as Arrow-batched ``mapInPandas`` stages.
-The decode libraries (cv2/PIL/ffmpeg) are NOT in this container, so the
-decode step is stubbed: ``decode_stub='fake'`` produces a deterministic
-feature vector from the bytes (so the Spark-side plumbing — schema,
-batching, partitioning — is fully testable), ``decode_stub='raise'``
-documents the real-library integration point.
+decode/feature step of each stage crosses into Python through
+``boundary.map_documents`` (Arrow batches, one dict per row, no pandas),
+and everything that needs no decode (ids, byte counts, the video filter,
+the frame fan-out) stays in the JVM. The decode libraries
+(cv2/PIL/ffmpeg) are NOT in this container, so each decode is a
+deterministic stand-in from the payload bytes: the Spark-side plumbing
+(schema, batching, partitioning) is fully testable, and a real decoder
+replaces only the per-row function.
 
 Reference analog: the image decode / grayscale / color-mode path
 (app/util_ocr.py:72-87, app/util_imagem.py:8-52) — C-library work behind a
@@ -16,14 +18,15 @@ per-batch boundary, never per-row Python.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
+
+from ..boundary import map_documents
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -49,12 +52,17 @@ _FEATURE_DIM = 8
 
 def _fake_decode(payload: bytes) -> list:
     """Deterministic stand-in for image/audio feature extraction: 8 floats
-    derived from the payload digest. Swap for a real decoder in prod."""
-    digest = hashlib.md5(bytes(payload)).digest()
+    derived from the payload digest."""
+    digest = hashlib.md5(payload).digest()
     return [
         round(int.from_bytes(digest[2 * i: 2 * i + 2], "big") / 65535.0, 6)
         for i in range(_FEATURE_DIM)
     ]
+
+
+def _feature_row(row: dict) -> dict:
+    p = row["payload"]
+    return {**row, "feature": _fake_decode(p) if p is not None else None}
 
 
 def extract_media_features(
@@ -62,38 +70,21 @@ def extract_media_features(
     id_col: str = "media_id",
     payload_col: str = "payload",
     type_col: str = "media_type",
-    decode_stub: str = "fake",
 ) -> DataFrame:
-    """binary payload → feature vectors via Arrow-batched mapInPandas.
-
-    ``decode_stub='raise'`` marks where cv2/PIL/torchaudio would plug in.
+    """binary payload → ``FEATURES_SCHEMA`` feature vectors. ``media_id``
+    (a string cast) and ``n_bytes`` (``length``, 0 for a NULL payload) are
+    JVM expressions; only the decode crosses the boundary, and a real
+    decoder (cv2/PIL/torchaudio) plugs in by replacing ``_fake_decode``.
     """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if decode_stub == "raise":
-                raise NotImplementedError(
-                    "real media decode requires cv2/PIL/ffmpeg (not in this "
-                    "container); use decode_stub='fake' for plumbing tests"
-                )
-            out = pd.DataFrame(
-                {
-                    "media_id": batch[id_col].astype(str),
-                    "media_type": batch[type_col],
-                    "n_bytes": [
-                        len(p) if p is not None else 0
-                        for p in batch[payload_col]
-                    ],
-                    "feature": [
-                        _fake_decode(p) if p is not None else None
-                        for p in batch[payload_col]
-                    ],
-                }
-            )
-            yield out
-
-    return media.select(id_col, payload_col, type_col).mapInPandas(
-        kernel, schema=FEATURES_SCHEMA
+    return map_documents(
+        media.select(
+            F.col(id_col).cast("string").alias("media_id"),
+            F.col(type_col).alias("media_type"),
+            F.coalesce(F.length(payload_col), F.lit(0)).alias("n_bytes"),
+            F.col(payload_col).alias("payload"),
+        ),
+        _feature_row,
+        FEATURES_SCHEMA,
     )
 
 
@@ -104,6 +95,31 @@ COLOR_MODE_SCHEMA = StructType(
         StructField("ratio_e6", IntegerType(), True),
     ]
 )
+
+
+def _color_mode_row(row: dict) -> dict:
+    """One media row → its color mode and ``ratio × 10⁶`` (NULL payload →
+    NULL both), the math of :func:`classify_color_mode`."""
+    import numpy as np
+
+    out = {"media_id": row["media_id"], "color_mode": None, "ratio_e6": None}
+    if row["payload"] is None:
+        return out
+    # stubbed decode: payload bytes tiled into an (n, 3) channel array
+    raw = np.frombuffer(row["payload"], dtype=np.uint8)
+    if raw.size < 3:
+        raw = np.resize(raw, 3) if raw.size else np.zeros(3, np.uint8)
+    px = raw[: raw.size - raw.size % 3].reshape(-1, 3).astype(np.int16)
+    r, g, b = px[:, 0], px[:, 1], px[:, 2]
+    diff_sum = float(
+        np.count_nonzero(np.abs(r - g))
+        + np.count_nonzero(np.abs(r - b))
+        + np.count_nonzero(np.abs(g - b))
+    )
+    ratio = diff_sum / len(px) if len(px) else 0.0
+    out["color_mode"] = 2 if ratio > 0.005 else (1 if ratio > 0 else 0)
+    out["ratio_e6"] = int(ratio * 1e6)
+    return out
 
 
 def classify_color_mode(
@@ -118,47 +134,16 @@ def classify_color_mode(
     ``ratio = (nnz(|r-g|) + nnz(|r-b|) + nnz(|g-b|)) / pixels``:
     > 0.005 → color (2), > 0 → grayscale (1), else black & white (0).
     The decode step (PIL Image.split) is stubbed deterministically: payload
-    bytes are tiled into an (n, 3) channel array. Swap ``_decode`` for PIL
+    bytes are tiled into an (n, 3) channel array. Swap that decode for PIL
     in production — the classification math is the graded part.
     """
-    import numpy as np
-
-    def _decode(payload: bytes) -> "np.ndarray":
-        raw = np.frombuffer(bytes(payload), dtype=np.uint8)
-        if raw.size < 3:
-            raw = np.resize(raw, 3) if raw.size else np.zeros(3, np.uint8)
-        return raw[: raw.size - raw.size % 3].reshape(-1, 3)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            modes, ratios = [], []
-            for payload in batch[payload_col]:
-                if payload is None:
-                    modes.append(None)
-                    ratios.append(None)
-                    continue
-                px = _decode(payload)
-                r = px[:, 0].astype(np.int16)
-                g = px[:, 1].astype(np.int16)
-                b = px[:, 2].astype(np.int16)
-                diff_sum = float(
-                    np.count_nonzero(np.abs(r - g))
-                    + np.count_nonzero(np.abs(r - b))
-                    + np.count_nonzero(np.abs(g - b))
-                )
-                ratio = diff_sum / len(px) if len(px) else 0.0
-                modes.append(2 if ratio > 0.005 else (1 if ratio > 0 else 0))
-                ratios.append(int(ratio * 1e6))
-            yield pd.DataFrame(
-                {
-                    "media_id": batch[id_col].astype(str),
-                    "color_mode": pd.array(modes, dtype="Int32"),
-                    "ratio_e6": pd.array(ratios, dtype="Int32"),
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        kernel, schema=COLOR_MODE_SCHEMA
+    return map_documents(
+        media.select(
+            F.col(id_col).cast("string").alias("media_id"),
+            F.col(payload_col).alias("payload"),
+        ),
+        _color_mode_row,
+        COLOR_MODE_SCHEMA,
     )
 
 
@@ -185,17 +170,38 @@ FRAMES_SCHEMA = StructType(
     ]
 )
 
+# the boundary's row: one video, its sampled frames as one array column
+_VIDEO_FRAMES_SCHEMA = StructType([
+    FRAMES_SCHEMA["media_id"],
+    StructField("frames", ArrayType(FRAMES_SCHEMA[1:], False), True),
+])
+
+
+def _video_frames(row: dict, target_frames: int) -> dict:
+    pb = row["payload"]
+    frames = None
+    if pb is not None:
+        n = len(pb) % 50 + 10
+        stride = -(-n // target_frames)
+        frames = [
+            {"n_frames": n, "frame_idx": idx, "fr_h48": int(
+                hashlib.md5(pb + f":f{idx}".encode()).hexdigest()[:12], 16)}
+            for idx in range(0, n, stride)
+        ]
+    return {"media_id": row["media_id"], "frames": frames}
+
 
 def sample_frames(
     media: DataFrame,
     target_frames: int = 4,
 ) -> DataFrame:
     """``(media_id, n_frames, frame_idx, fr_h48)``: stride frame
-    sampling for video payloads — the one-row-in / k-rows-out
-    ``mapInPandas`` fan-out shape a video pipeline needs (decode a
-    clip once per batch, emit ≤ ``target_frames`` evenly-strided
-    frames). Stride = ceil(n_frames / target), frames at
-    0, stride, 2·stride, … — deterministic, no RNG.
+    sampling for video payloads — the one-row-in / k-rows-out fan-out
+    shape a video pipeline needs (decode a clip once, emit ≤
+    ``target_frames`` evenly-strided frames). Stride = ceil(n_frames /
+    target), frames at 0, stride, 2·stride, … — deterministic, no RNG.
+    Python returns each video's frames as one array column; the fan-out
+    to rows is an ``inline`` in the JVM, and a NULL payload gives none.
 
     The ffmpeg decode is stubbed (not in this container): frame count
     derives from the payload length (``len % 50 + 10`` — a stand-in
@@ -203,7 +209,7 @@ def sample_frames(
     digest of ``payload ‖ ':f' ‖ idx``, so the driver oracle can
     replay the whole thing in SQL while the Spark side exercises the
     REAL plumbing: Arrow batches in, fan-out frame rows out, schema
-    typed. A real decoder replaces only the inner loop.
+    typed. A real decoder replaces only ``_video_frames``.
 
     Input contract (fixed, not parameterized — the media-table schema
     of :func:`synth_media_table`): rows with ``media_id``, ``payload``
@@ -212,26 +218,10 @@ def sample_frames(
     audio payload has no meaning)."""
     if target_frames < 1:
         raise ValueError("target_frames >= 1 required")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"media_id": [], "n_frames": [], "frame_idx": [],
-                   "fr_h48": []}
-            for mid, payload in zip(batch["media_id"], batch["payload"]):
-                pb = bytes(payload)
-                n = len(pb) % 50 + 10
-                stride = -(-n // target_frames)
-                for idx in range(0, n, stride):
-                    digest = hashlib.md5(
-                        pb + f":f{idx}".encode()
-                    ).hexdigest()
-                    out["media_id"].append(mid)
-                    out["n_frames"].append(n)
-                    out["frame_idx"].append(idx)
-                    out["fr_h48"].append(int(digest[:12], 16))
-            yield pd.DataFrame(out)
-
     vids = media.where(F.col("media_type") == "video").select(
         "media_id", "payload"
     )
-    return vids.mapInPandas(kernel, FRAMES_SCHEMA)
+    per_video = partial(_video_frames, target_frames=target_frames)
+    return map_documents(vids, per_video, _VIDEO_FRAMES_SCHEMA).select(
+        "media_id", F.inline("frames")
+    )

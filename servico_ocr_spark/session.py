@@ -1,8 +1,10 @@
 """SparkSession factory with the engine's standard configuration.
 
-Tuned for correctness-at-scale defaults: Arrow transport on (all Python
-stages are pandas/Arrow batch, never per-row, per BASELINE.json input_hint),
-AQE on (runtime coalescing + skew splitting for the relational operators).
+Tuned for correctness-at-scale defaults: Arrow transport on (every Python
+stage outside ``streaming/`` crosses through one Arrow-batched
+``mapInArrow`` boundary, ``boundary.map_documents``, never a per-row UDF,
+per BASELINE.json input_hint), AQE on (runtime coalescing + skew
+splitting for the relational operators).
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # documents are small rows; bigger Arrow batches amortize the
-        # Python round-trip of the extraction faces' mapInArrow
+        # Python round-trip of the mapInArrow boundary
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

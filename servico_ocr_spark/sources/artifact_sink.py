@@ -6,9 +6,10 @@ app/util_pdf_ocr.py:34-63) and then Ghostscript-compresses it, keeping
 the compressed file only when the ratio is positive
 (app/util_pdf_compress.py:56-92, app/util_processar_pasta.py:456-474).
 
-Here the Spark plumbing is real — a ``mapInPandas`` sink stage over the
-analysis table that writes one artifact per ok document (atomic
-temp-then-rename with an attempt-unique temp name, the reference's
+Here the Spark plumbing is real — a sink stage over the analysis table
+(non-ok rows filtered in the JVM, then ``boundary.map_documents``:
+``mapInArrow``, no pandas) that writes one artifact per ok document
+(atomic temp-then-rename with an attempt-unique temp name, the reference's
 upload pattern at app/app_controller.py:111-112) and yields a manifest
 row per document — while the binary renderers are EXPLICITLY injected:
 :func:`write_artifacts` takes ``renderer``/``compressor`` callables
@@ -34,10 +35,13 @@ from __future__ import annotations
 import hashlib
 import os
 import zlib
-from typing import Callable, Iterator
+from functools import partial
+from typing import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
+
+from ..boundary import map_documents
 
 MANIFEST_SCHEMA = (
     "url string, artifact string, n_bytes long, ratio_pct int, "
@@ -101,6 +105,46 @@ def compress_artifact(data: bytes, power: int = 0) -> tuple[bytes, float]:
     return compressed, ratio
 
 
+def _write_artifact(
+    row: dict, out_dir: str, power: int, renderer: Callable,
+    compressor: Callable,
+) -> dict:
+    """One ok analysis row → its artifact file under ``out_dir`` and its
+    manifest row."""
+    from pyspark import TaskContext
+
+    # executor-side: the driver's filesystem is not the executors'
+    os.makedirs(out_dir, exist_ok=True)
+    ctx = TaskContext.get()
+    attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
+    raw = renderer(row["url"], row["boxes"] or [], row["paginas"])
+    try:
+        data, ratio = compressor(raw, power)
+        if ratio > 0:
+            kept, note = True, f" - compactado {ratio:.2f}"
+        else:
+            data, kept, note = raw, False, " - compactação ignorada"
+    except Exception:
+        # compressor failure keeps the original artifact
+        # (app/util_processar_pasta.py:470-474)
+        data, ratio = raw, 0.0
+        kept, note = False, " - compactação impossível"
+    name = hashlib.md5(row["url"].encode()).hexdigest() + ".pdf"
+    path = os.path.join(out_dir, name)
+    tmp = f"{path}.{attempt}.tmp"
+    with open(tmp, "wb") as fh:
+        fh.write(data)
+    os.replace(tmp, path)  # atomic, like copy-then-rename
+    return {
+        "url": row["url"],
+        "artifact": name,
+        "n_bytes": len(data),
+        "ratio_pct": int(ratio * 100),
+        "compressed": kept,
+        "note": note,
+    }
+
+
 def write_artifacts(
     analysis: DataFrame,
     out_dir: str,
@@ -116,54 +160,11 @@ def write_artifacts(
     the temp name is attempt-unique so a speculative or retried task
     attempt can never truncate another attempt's in-flight write.
     """
-
-    def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        # executor-side: the driver's filesystem is not the executors'
-        os.makedirs(out_dir, exist_ok=True)
-        ctx = TaskContext.get()
-        attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                if row.status != "ok":
-                    continue
-                raw_boxes = row.boxes  # numpy array via Arrow; no `or []`
-                boxes = [
-                    b if isinstance(b, dict) else b.asDict()
-                    for b in (raw_boxes if raw_boxes is not None else [])
-                ]
-                raw = renderer(row.url, boxes, row.paginas)
-                try:
-                    data, ratio = compressor(raw, power)
-                    if ratio > 0:
-                        kept, note = True, f" - compactado {ratio:.2f}"
-                    else:
-                        data, kept, note = raw, False, " - compactação ignorada"
-                except Exception:
-                    # compressor failure keeps the original artifact
-                    # (app/util_processar_pasta.py:470-474)
-                    data, ratio = raw, 0.0
-                    kept, note = False, " - compactação impossível"
-                name = hashlib.md5(row.url.encode()).hexdigest() + ".pdf"
-                path = os.path.join(out_dir, name)
-                tmp = f"{path}.{attempt}.tmp"
-                with open(tmp, "wb") as fh:
-                    fh.write(data)
-                os.replace(tmp, path)  # atomic, like copy-then-rename
-                out.append(
-                    {
-                        "url": row.url,
-                        "artifact": name,
-                        "n_bytes": len(data),
-                        "ratio_pct": int(ratio * 100),
-                        "compressed": kept,
-                        "note": note,
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    cols = analysis.select("url", "status", "paginas", "boxes")
-    return cols.mapInPandas(sink, schema=MANIFEST_SCHEMA)
+    ok = analysis.where(F.col("status") == "ok").select(
+        "url", "paginas", "boxes"
+    )
+    sink = partial(
+        _write_artifact, out_dir=out_dir, power=power, renderer=renderer,
+        compressor=compressor,
+    )
+    return map_documents(ok, sink, StructType.fromDDL(MANIFEST_SCHEMA))

@@ -13,27 +13,23 @@ blob stops (everything after an unframable point is unattributable),
 while other blobs in the same task are unaffected — the pipeline's
 error-isolation contract (pipeline.py's corrupt-input rule).
 
-Scale shape: one Arrow-batched ``mapInPandas`` over the binary blob
-column — embarrassingly parallel, no shuffle; a blob never spans tasks
-(the parquet row is the atom, matching how Common Crawl WARCs are
-processed per file). Memory is bounded by the largest single blob per
-batch, the same bound the OCR rasterizer already lives with.
+Scale shape: one pass of the binary blob column through
+``boundary.map_documents`` (``mapInArrow``, no pandas) — embarrassingly
+parallel, no shuffle; a blob never spans tasks (the parquet row is the
+atom, matching how Common Crawl WARCs are processed per file). Python
+returns each blob's records as one array column and the JVM fans them
+out to rows with ``inline``. Memory is bounded by the largest single blob
+per batch, the same bound the OCR rasterizer already lives with.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
+    ArrayType, BinaryType, LongType, StringType, StructField, StructType,
 )
+
+from ..boundary import map_documents
 
 WARC_RECORDS_SCHEMA = StructType(
     [
@@ -48,6 +44,11 @@ WARC_RECORDS_SCHEMA = StructType(
 )
 
 _COLS = [f.name for f in WARC_RECORDS_SCHEMA.fields][1:]
+# the boundary's row: one blob, its records as one array column
+_BLOB_RECORDS_SCHEMA = StructType([
+    WARC_RECORDS_SCHEMA["blob_id"],
+    StructField("records", ArrayType(WARC_RECORDS_SCHEMA[1:], False), False),
+])
 
 
 def split_warc_records(blob: bytes) -> list[tuple]:
@@ -76,11 +77,11 @@ def split_warc_records(blob: bytes) -> list[tuple]:
             fields[k.strip().lower()] = v.strip()
         url = fields.get("warc-target-uri")
         ts = fields.get("warc-date")
-        try:
-            clen = int(fields["content-length"])
-        except (KeyError, ValueError):
+        digits = fields.get("content-length", "")
+        if not (digits.isascii() and digits.isdigit()):  # 1*DIGIT: no sign
             recs.append((i, url, ts, None, 0, "bad content-length"))
             break
+        clen = int(digits)
         start = end_hdr + 4
         payload = blob[start:start + clen]
         if len(payload) < clen:
@@ -94,6 +95,15 @@ def split_warc_records(blob: bytes) -> list[tuple]:
     return recs
 
 
+def _blob_records(row: dict) -> dict:
+    return {
+        "blob_id": row["blob_id"],
+        "records": [
+            dict(zip(_COLS, rec)) for rec in split_warc_records(row["warc"])
+        ],
+    }
+
+
 def read_warc_records(
     blobs: DataFrame,
     id_col: str = "blob_id",
@@ -104,20 +114,11 @@ def read_warc_records(
     Well-formed records carry ``error = NULL``; a malformed record is
     one non-null-``error`` row ending that blob's parse (framing after
     an unframable point is guesswork — refuse rather than misattribute
-    payload bytes to the wrong url)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for bid, blob in zip(batch[id_col], batch[payload_col]):
-                if blob is None:
-                    continue
-                for rec in split_warc_records(bytes(blob)):
-                    rows.append((int(bid),) + rec)
-            yield pd.DataFrame(
-                rows, columns=["blob_id"] + _COLS
-            )
-
-    return blobs.select(id_col, payload_col).mapInPandas(
-        kernel, schema=WARC_RECORDS_SCHEMA
+    payload bytes to the wrong url). A NULL blob gives no rows."""
+    blobs = blobs.where(F.col(payload_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias("blob_id"),
+        F.col(payload_col).alias("warc"),
+    )
+    return map_documents(blobs, _blob_records, _BLOB_RECORDS_SCHEMA).select(
+        "blob_id", F.inline("records")
     )

@@ -1,19 +1,28 @@
-"""Edge cases of the extraction faces' one Arrow boundary
-(``boundary.map_documents``) and of the per-document wrapper around it
-(``pipeline.document_row``), for both faces of ``pipeline.extract``."""
+"""Edge cases of the one Arrow boundary (``boundary.map_documents``): the
+per-document wrapper around it (``pipeline.document_row``) for both faces
+of ``pipeline.extract``, and the fan-out shape (an ``array<struct>``
+column, then ``inline`` in the JVM) of the stages that emit zero or
+several rows per input row."""
 
 from functools import partial
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType, LongType, StructField, StructType,
+)
 
-from servico_ocr_spark.boundary import documents_kernel
+from servico_ocr_spark.boundary import documents_kernel, map_documents
 from servico_ocr_spark.corpus import build_corpus, html_pages_from_documents
 from servico_ocr_spark.pipeline import (
     FACES, JOB_TS, document_row, extract, run_extraction,
 )
 from servico_ocr_spark.schemas import ANALYSIS_SCHEMA, PAGES_SCHEMA
+from servico_ocr_spark.sources.warc import (
+    WARC_RECORDS_SCHEMA, read_warc_records,
+)
 
 SF = "/root/testdata/sf0.001"
 CORRUPT = [
@@ -109,3 +118,50 @@ def test_both_faces_write_the_same_lineage(spark, tmp_path):
         assert {r["partition_id"] for r in table.collect()} <= {0, 1}
     assert lineage["ocr"] == lineage["web"]
     assert lineage["ocr"][1] == {JOB_TS}
+
+
+ITEM = StructType([StructField("j", LongType(), False)])
+FAN_OUT = StructType([
+    StructField("k", LongType(), False),
+    StructField("items", ArrayType(ITEM, False), True),
+])
+
+
+def test_fan_out_gives_zero_one_or_k_rows_per_doc(spark):
+    """0, 1 and k rows per doc; a NULL array gives none; the empty
+    partitions of an 8-way split of 4 rows give none; the output keeps the
+    struct's field types and nullability."""
+
+    def _items(row):  # local: shipped to the workers by value
+        n = row["n"]
+        return {"k": row["k"],
+                "items": None if n is None else [{"j": j} for j in range(n)]}
+
+    docs = spark.createDataFrame(
+        [(1, 0), (2, 1), (3, 4), (4, None)], "k long, n int")
+    out = map_documents(docs.repartition(8), _items, FAN_OUT).select(
+        "k", F.inline("items"))
+    assert out.schema == StructType([FAN_OUT["k"], *ITEM.fields])
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (2, 0), (3, 0), (3, 1), (3, 2), (3, 3)]
+    none = map_documents(docs.where("k < 0"), _items, FAN_OUT)
+    assert none.select("k", F.inline("items")).collect() == []
+
+
+def test_fan_out_partition_of_only_malformed_warc_blobs(spark):
+    """Every blob of the one partition is malformed: each gives exactly one
+    error row, typed by ``WARC_RECORDS_SCHEMA``, and the task succeeds."""
+    blobs = spark.createDataFrame(
+        [(1, b"HTTP/1.1 200 OK\r\n\r\nbody"),
+         (2, b"WARC/1.0\r\nContent-Length: 5"),
+         (3, b"WARC/1.0\r\nContent-Length: -126\r\n\r\nabc"),
+         (4, b"WARC/1.0\r\nContent-Length: 99\r\n\r\nshort")],
+        "blob_id long, warc binary",
+    ).coalesce(1)
+    out = read_warc_records(blobs)
+    assert out.schema == WARC_RECORDS_SCHEMA
+    got = sorted((r["blob_id"], r["rec_index"], r["n_bytes"], r["error"])
+                 for r in out.collect())
+    assert got == [(1, 0, 0, "bad magic"), (2, 0, 0, "truncated header"),
+                   (3, 0, 0, "bad content-length"),
+                   (4, 0, 5, "truncated payload")]

@@ -373,13 +373,22 @@ def test_media_features_deterministic_and_batched(spark):
     assert rows["m-1"]["feature"] == again["m-1"]["feature"]
 
 
-def test_media_decode_stub_raises(spark):
+def test_media_features_jvm_columns_match_python(spark):
+    """``media_id`` and ``n_bytes`` are JVM expressions (a string cast and
+    ``length``, 0 for a NULL payload); on collected rows they must equal
+    what Python's ``str``/``len`` give for the same inputs."""
+    rows = [(7, b"abc", "image"), (8, bytes(range(256)) * 3, "video"),
+            (9, b"", "audio"), (10, None, "image"),
+            (11, "ação ✓".encode(), "audio")]
     media = spark.createDataFrame(
-        [("m-1", b"x", "image")],
-        "media_id string, payload binary, media_type string",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|real media decode"):
-        extract_media_features(media, decode_stub="raise").collect()
+        rows, "media_id long, payload binary, media_type string")
+    got = {r["media_id"]: r for r in extract_media_features(media).collect()}
+    assert set(got) == {str(mid) for mid, _, _ in rows}
+    for mid, payload, mtype in rows:
+        r = got[str(mid)]
+        assert r["n_bytes"] == (len(payload) if payload is not None else 0)
+        assert r["media_type"] == mtype
+        assert (r["feature"] is None) == (payload is None)
 
 
 def test_color_mode_classification(spark):

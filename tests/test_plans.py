@@ -112,6 +112,16 @@ def test_no_row_at_a_time_python_anywhere(spark):
         assert "BatchEvalPython" not in plan, name
 
 
+@pytest.mark.parametrize(
+    "name", ["warc_extract", "media_features", "frame_samples"])
+def test_python_stages_cross_the_one_arrow_boundary(spark, name):
+    """WARC, media and frame stages cross into Python through
+    ``boundary.map_documents`` (one MapInArrow), never a pandas kernel."""
+    plan = _plan(entrymod.queries()[name](spark, SF))
+    assert plan.count("MapInArrow") == 1, name
+    assert "MapInPandas" not in plan, name
+
+
 def test_aqe_splits_skewed_join_at_runtime(spark):
     """SURVEY §4 claims AQE skew-join splitting comes free for the
     relational operators — prove it: a 90%-one-key join is re-planned at

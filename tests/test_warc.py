@@ -48,6 +48,18 @@ def test_split_malformed_blobs_degrade_per_blob():
     bad = b"WARC/1.0\r\nWARC-Target-URI: https://n\r\n\r\nrest"
     assert split_warc_records(bad)[0][5] == "bad content-length"
     assert split_warc_records(b"")== []
+    # Content-Length is 1*DIGIT: a sign, a blank or a non-ASCII digit is
+    # unframable. A negative length would send the parse back to the blob
+    # start (an unbounded loop) or emit n_bytes < 0 with no error.
+    first = _rec("https://ok", b"x" * 10)
+    for clen in (b"-126", b"-2", b"+3", b"", b"\xc2\xb2", b"1 2", b"0x10"):
+        blob = first + _rec("https://neg", b"abc").replace(
+            b"Content-Length: 3", b"Content-Length: " + clen)
+        recs = split_warc_records(blob)
+        assert [(r[0], r[1], r[5]) for r in recs] == [
+            (0, "https://ok", None), (1, "https://neg", "bad content-length"),
+        ], clen
+        assert all(r[4] >= 0 for r in recs)
 
 
 def test_read_warc_records_spark_plumbing(spark):
