@@ -14,7 +14,10 @@ from typing import NamedTuple
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this file's own checkout, so a gate run from a second checkout imports
+# that checkout's __spark_entry__ in this process, as its workers do
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -2,6 +2,7 @@
 aggregation, fixed-point PageRank (operators/links + the linked-pages
 fixture)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from servico_ocr_spark.corpus import linked_pages_from_documents
@@ -362,6 +363,40 @@ def test_seeded_pagerank_matches_python_reference_exactly(spark):
     got2 = {r["node"]: r["rank"]
             for r in pagerank(df, iterations=3, seeds=sdf2).collect()}
     assert got2 == got
+
+
+_PR_EDGE_CASES = [
+    ("a", "b"), ("a", "b"),  # duplicated edge: out_deg counts it twice
+    ("a", "a"),  # self-loop
+    ("b", "c"), ("c", "a"),
+    ("src", "a"),  # source-only node
+    ("c", "sink"),  # sink-only node (out_deg 0)
+]
+
+
+@pytest.mark.parametrize("iters", [0, 1, 4])
+def test_pagerank_edge_cases_match_python_references(spark, iters):
+    """Both variants against their Python twins on the graph shapes the
+    union-aggregate round must keep: a node that only sends or only
+    receives still has a row every round, and ``iterations=0`` returns
+    the start ranks. The seed set holds an off-graph node."""
+    df = spark.createDataFrame(_PR_EDGE_CASES, "src string, dst string")
+    want = _pagerank_reference(_PR_EDGE_CASES, iters, 1_000_000, 85)
+    got = {r["node"]: r["rank"]
+           for r in pagerank(df, iterations=iters).collect()}
+    assert got == want
+    seeds = {"a", "sink", "zzz"}
+    sdf = spark.createDataFrame([(s,) for s in seeds], "node string")
+    want_s = _seeded_pagerank_reference(
+        _PR_EDGE_CASES, seeds, iters, 1_000_000, 85
+    )
+    got_s = {r["node"]: r["rank"]
+             for r in pagerank(df, iterations=iters, seeds=sdf).collect()}
+    assert got_s == want_s
+    assert set(got_s) == set(got) == {"a", "b", "c", "src", "sink"}
+    if iters == 0:
+        assert set(got.values()) == {1_000_000}
+        assert got_s == {n: 1_000_000 if n in seeds else 0 for n in got}
 
 
 def test_word_adjacency_edges_symmetric_distinct_no_selfloop(spark):

@@ -244,14 +244,57 @@ def test_link_extract_zero_shuffle_single_codegen_stage(spark):
 
 
 def test_pagerank_reuses_static_edge_exchanges(spark):
-    """Each PageRank round joins the SAME edges⋈out-degree table; the
-    executed plan must collapse those references via runtime exchange
-    reuse instead of re-parsing the corpus once per round (the minhash
-    ReusedExchange discipline)."""
+    """Each PageRank round joins the SAME edge table (hashed by src) and
+    unions in the SAME node table (``link_degrees``: out-degree, base
+    and start rank per node); the executed plan must collapse those
+    references via runtime exchange reuse instead of re-parsing the
+    corpus once per round (the minhash ReusedExchange discipline)."""
     df = entrymod._q_pagerank(spark, SF)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ReusedExchange") >= 8, plan[:4000]
+
+
+def _joins(plan) -> list:
+    """Every Join node of a logical plan (py4j tree walk)."""
+    found, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Join":
+            found.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+@pytest.mark.parametrize("iterations", [1, 3, 5])
+def test_pagerank_round_is_one_join_one_aggregate(spark, iterations):
+    """A PageRank round is one inner join (edges ⋈ ranks on src) plus
+    one union-aggregate that keeps every node: no join back onto the
+    node universe and no edges⋈out-degree join. The seeded variant
+    has the same rounds; its only LeftOuter joins are the seed join
+    of the static node table."""
+    from servico_ocr_spark.operators import pagerank
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")],
+        "src string, dst string",
+    )
+    seeds = spark.createDataFrame([("a",)], "seed_node string")
+    for seeded in (False, True):
+        df = pagerank(edges, iterations, seeds=seeds if seeded else None)
+        joins = _joins(df._jdf.queryExecution().optimizedPlan())
+        kinds = [j.joinType().toString() for j in joins]
+        assert kinds.count("Inner") == iterations, kinds
+        outer = [j for j in joins if j.joinType().toString() != "Inner"]
+        if not seeded:
+            assert outer == [], kinds
+        else:
+            assert outer, kinds
+            assert all(j.joinType().toString() == "LeftOuter"
+                       and "seed_node" in j.right().toString()
+                       and "seed_node" not in j.left().toString()
+                       for j in outer), kinds
 
 
 def test_inverted_index_tf_computed_once_topk_bounded(spark):
