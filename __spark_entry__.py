@@ -54,7 +54,7 @@ from servico_ocr_spark.operators import (
     web_analysis,
     web_partition_metrics,
 )
-from servico_ocr_spark.operators.common import h48, norm_text, words_array
+from servico_ocr_spark.operators.common import cut, h48, norm_text, words_array
 from servico_ocr_spark.operators.textstats import (
     C4_MIN_KEPT_LINES,
     C4_MIN_LINE_WORDS,
@@ -2918,14 +2918,13 @@ def _mlt_queries(docs: DataFrame) -> DataFrame:
     carrier ids are md5-derived and differ per sf, so an id-based
     query set silently degenerates to zero matches (measured — the
     first draft returned 0 rows at sf0.01+)."""
-    return (
+    return cut(
         docs.where(
             F.array_contains(words_array(F.col("text")), F.lit("dup"))
         )
         .select("doc_id")
         .orderBy("doc_id")
         .limit(_ANN_QUERIES)
-        .localCheckpoint(eager=False)
     )
 
 
@@ -3064,11 +3063,9 @@ def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("train"))
         .alias("split"),
     )
-    # ONE tokenize pass shared by train and score (lazy cut; the
-    # train side restricts itself via the label inner join)
-    feats = hashed_features(labeled, dims=_NB_DIMS).localCheckpoint(
-        eager=False
-    )
+    # ONE tokenize pass shared by train and score (cut; the train
+    # side restricts itself via the label inner join)
+    feats = cut(hashed_features(labeled, dims=_NB_DIMS))
     w = nb_train(
         labeled.where(F.col("split") == "train"),
         dims=_NB_DIMS,
@@ -3250,9 +3247,7 @@ def _q_classifier_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("train"))
         .alias("split"),
     )
-    feats = hashed_features(labeled, dims=_NB_DIMS).localCheckpoint(
-        eager=False
-    )
+    feats = cut(hashed_features(labeled, dims=_NB_DIMS))
     w = nb_train(
         labeled.where(F.col("split") == "train"),
         dims=_NB_DIMS,
@@ -7410,7 +7405,7 @@ def _q_frontier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the robots gate's agg feeds a semi join; schedule +
     apportionment as plan-locked in their own queries; one final
     broadcast-able quota join (host-cardinality side). ``pages`` and
-    ``allowed`` are lazily cut: three operators re-derive the regex
+    ``allowed`` are cut: three operators re-derive the regex
     canonicalization from them, and uncut the synthesized-url +
     canonicalization chains stacked inside single join spans — four
     "Code grows beyond 64 KB" codegen fallbacks (interpreted stages)
@@ -7423,7 +7418,7 @@ def _q_frontier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         robots_disallow,
     )
 
-    pages = _url_corpus(spark, sf_dir).localCheckpoint(eager=False)
+    pages = cut(_url_corpus(spark, sf_dir))
     hosts = (
         canonicalize_urls(pages)
         .select("host")
@@ -7441,9 +7436,7 @@ def _q_frontier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowed_ids = gate.where(
         (F.col("blocked") == 0) & (F.col("host") != "")
     ).select("doc_id")
-    allowed = pages.join(allowed_ids, "doc_id", "left_semi").localCheckpoint(
-        eager=False
-    )
+    allowed = cut(pages.join(allowed_ids, "doc_id", "left_semi"))
     sched = crawl_schedule(allowed, rate_per_wave=_SCHED_RATE)
     n_allowed = allowed_ids.count()
     budget = n_allowed // 4
@@ -7939,7 +7932,7 @@ def _q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalize_urls (host extraction) → d2-lineage citation edges
     (doc i's host links its doc-i÷2 parent's host — the url corpus's
     deterministic cross-host structure) → links.pagerank, whose
-    unconditional lazy edge cut matters most here: the host-edge table
+    unconditional edge cut matters most here: the host-edge table
     is a DERIVED relation (regex canonicalization → self-join →
     distinct) that pagerank references from out-degrees, the node
     universe and every round's join — uncut, the executed plan re-ran
@@ -7955,10 +7948,8 @@ def _q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonicalization chain into BOTH join inputs of one whole-stage
     # span — measured "Code grows beyond 64 KB" codegen fallback (the
     # stage ran interpreted) and the regex chain executed twice.
-    canon = (
-        canonicalize_urls(_url_corpus(spark, sf_dir))
-        .select("doc_id", "host")
-        .localCheckpoint(eager=False)
+    canon = cut(
+        canonicalize_urls(_url_corpus(spark, sf_dir)).select("doc_id", "host")
     )
     parent = canon.select(
         F.col("doc_id").alias("p_id"), F.col("host").alias("p_host")
@@ -8050,7 +8041,7 @@ def _q_crawl_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/links.bfs_depths): frontier iteration — each round joins
     only the last-settled layer against the edge table, distinct before
     the shuffle (hub fan-in collapses map-side), anti-join against the
-    settled set, localCheckpoint per layer. The hop cap is a budget:
+    settled set, one cut per layer. The hop cap is a budget:
     the empty-frontier early exit fires well before 12 on this graph.
     Oracle is a DuckDB recursive CTE enumerating (node, depth<=cap)
     pairs; min(depth) per node is the BFS distance."""
@@ -8274,8 +8265,8 @@ def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling fixpoint (operators/links.kcore, k=8): per round
-    one combinable degree agg + two keep-joins, per-round lazy
-    localCheckpoint, the surviving-edge count is both the single action
+    one combinable degree agg + two keep-joins, one cut per round,
+    the surviving-edge count is both the single action
     and the convergence signal. Early exit ≡ running all rounds
     (post-fixpoint rounds are no-ops), so the fixed-depth unrolled
     oracle reproduces the data-dependent iteration exactly."""
@@ -8332,7 +8323,7 @@ def _q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts as its own label, new label = most frequent neighbor label
     with MIN tie-break — fully deterministic (no visit order, no
     randomness), so the unrolled-CTE oracle reproduces it bit-for-bit.
-    The neighbor table is checkpointed once (joined every round); each
+    The neighbor table is cut once (joined every round); each
     round is join + count + window-max + min-agg, all keyed on node."""
     from servico_ocr_spark.operators import label_propagation
 

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .common import distinct_words, h48, words_array
+from .common import cut, distinct_words, h48, words_array
 from .stats import with_ilog_bucket
 
 #: Sentinel dims in the weight table: PRIOR_DIM carries the class
@@ -172,7 +172,7 @@ def nb_train(
     except the two combinable aggs.
 
     ``features`` optionally supplies a prebuilt ``(doc_id, dim)``
-    table (e.g. one shared, localCheckpointed tokenize pass reused by
+    table (e.g. one shared, cut tokenize pass reused by
     :func:`nb_score` — one corpus scan for the whole train+score
     pipeline instead of two); rows are inner-joined to ``df``'s ids,
     so a broader feature table restricts itself to the training
@@ -289,8 +289,8 @@ def dsir_features(
 
     Shape: ONE tokenize pass; bigrams via posexplode + window ``lead``
     (the shingling discipline — whole-stage codegen, never array HOFs);
-    the token stream is lazily localCheckpointed because the unigram
-    and bigram projections both read it (without the cut the tokenize
+    the token stream is cut because the unigram and bigram projections
+    both read it (without the cut the tokenize
     + window subtree executes twice). Then one combinable count agg;
     per-doc state is ≤ min(2·len, dims) rows.
     """
@@ -299,9 +299,9 @@ def dsir_features(
         F.posexplode(words_array(F.col(text_col))).alias("pos", "w1"),
     )
     win = Window.partitionBy("doc_id").orderBy("pos")
-    stream = tokens.select(
+    stream = cut(tokens.select(
         "doc_id", "w1", F.lead("w1", 1).over(win).alias("w2")
-    ).localCheckpoint(eager=False)
+    ))
     grams = stream.select("doc_id", F.col("w1").alias("f")).unionByName(
         stream.where(F.col("w2").isNotNull()).select(
             "doc_id", F.concat_ws(" ", "w1", "w2").alias("f")
@@ -425,10 +425,10 @@ def dsir_weights(
     ``dsir_features(external)`` — DSIR's usual Wikipedia-style target).
     Exactly one of the two is required.
 
-    Scale shape: one corpus feature pass (lazily localCheckpointed —
-    the bucket aggregation and the per-doc scoring both read it), two
-    ≤ dims-row combinable bucket aggs, the dims-row weight table
-    broadcast onto the feature stream, one per-doc combinable sum.
+    Scale shape: one corpus feature pass (cut — the bucket aggregation
+    and the per-doc scoring both read it), two ≤ dims-row combinable
+    bucket aggs, the dims-row weight table broadcast onto the feature
+    stream, one per-doc combinable sum.
     Zero-token documents are restored from the id spine with
     ``n_feat = 0, dsir_w = 0`` (the explode-drops-empty-docs lesson).
     Selection ("resample the top fraction") composes downstream —
@@ -440,9 +440,7 @@ def dsir_weights(
         raise ValueError(
             "exactly one of target_ids / target_features is required"
         )
-    rf = dsir_features(df, text_col, id_col, dims).localCheckpoint(
-        eager=False
-    )
+    rf = cut(dsir_features(df, text_col, id_col, dims))
     if target_features is None:
         tfe = rf.join(
             target_ids.select(

@@ -24,30 +24,31 @@ Scale shape per round: points live as an exploded (id, dim, q) table
 (one row per coordinate — codegen arithmetic, no interpreted array
 HOFs in the loop); centroids are k·d rows, always BROADCAST; the
 distance step is one broadcast join + one (id, cid) aggregation; the
-update is one (cid, dim) aggregation. Points are lazily
-local-checkpointed once (referenced twice per round), centroids every
-round (lineage would otherwise grow per round — the
-pagerank/star-contraction discipline).
+update is one (cid, dim) aggregation. Points are cut once (referenced
+twice per round), centroids every round (lineage would otherwise grow
+per round).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .common import cut
+
 
 def _quantized_points(
     emb: DataFrame, id_col: str, vec_col: str, scale: int
 ) -> DataFrame:
-    """(vid, dim, q): the exploded integer-grid point table (lazily
-    checkpointed — referenced twice per Lloyd round)."""
-    return emb.select(
+    """(vid, dim, q): the exploded integer-grid point table (cut —
+    referenced twice per Lloyd round)."""
+    return cut(emb.select(
         F.col(id_col).alias("vid"),
         F.posexplode(F.col(vec_col)).alias("dim", "x"),
     ).select(
         "vid",
         "dim",
         F.floor(F.col("x").cast("double") * scale).cast("long").alias("q"),
-    ).localCheckpoint(eager=False)
+    ))
 
 
 def _assign(pts: DataFrame, cent: DataFrame, k: int) -> DataFrame:
@@ -75,13 +76,13 @@ def _assign(pts: DataFrame, cent: DataFrame, k: int) -> DataFrame:
 
 def _lloyd(pts: DataFrame, k: int, iterations: int) -> DataFrame:
     """(cid, dim, cq): final centroids after ``iterations`` Lloyd
-    rounds seeded from the k smallest ids; returned lazily
-    checkpointed (the caller joins it at least once more)."""
+    rounds seeded from the k smallest ids; returned cut (the caller
+    joins it at least once more)."""
     cent = pts.where(F.col("vid") < k).select(
         F.col("vid").alias("cid"), "dim", F.col("q").alias("cq")
     )
     for _ in range(iterations):
-        cent = cent.localCheckpoint(eager=False)
+        cent = cut(cent)
         a = _assign(pts, cent, k)
         s = (
             a.select("vid", "cid")
@@ -102,7 +103,7 @@ def _lloyd(pts: DataFrame, k: int, iterations: int) -> DataFrame:
                 .alias("cq"),
             )
         )
-    return cent.localCheckpoint(eager=False)
+    return cut(cent)
 
 
 def kmeans_lite(
@@ -170,10 +171,10 @@ def semantic_dedup(
 
     if threshold_e6 < 0:
         raise ValueError("threshold_e6 >= 0 required")
-    assign = kmeans_lite(
+    assign = cut(kmeans_lite(
         emb, k=k, iterations=iterations,
         id_col=id_col, vec_col=vec_col, scale=scale,
-    ).localCheckpoint(eager=False)  # referenced 3x below
+    ))  # referenced 3x below
     vecs = emb.select(
         F.col(id_col).alias("vec_id"),
         _int_vec(F.col(vec_col)).alias("v"),

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .common import distinct_words, h48, norm_text, words_array
+from .common import cut, distinct_words, h48, norm_text, words_array
 
 #: RECOMMENDED document-frequency cap for candidate-join features (words
 #: / shingles). A feature present in more docs than this carries no
@@ -384,8 +384,9 @@ def neardup_components(
     iterative algorithms on Spark, cf. GraphX Pregel); all per-round work
     is two groupBy-min aggregations + two equi-joins, fully distributed.
     Each round runs exactly ONE action: a checksum aggregation over the
-    new edge set that doubles as the materialization of its *lazy*
-    ``localCheckpoint`` (lineage cut + convergence signal in one job).
+    new edge set that doubles as the materialization of its :func:`cut`
+    (lineage cut + convergence signal in one job); the first round's
+    checksum also materializes the cut input edge table.
     Checksum equality only *suspects* a fixpoint; an exact anti-join
     verification confirms it before the loop exits, so a colliding
     checksum can never silently truncate components.
@@ -407,12 +408,11 @@ def neardup_components(
     nodes = ids_df.select(F.col(id_col).cast("long").alias("node"))
     # canonical orientation: u > v for every stored edge
     pa, pb = F.col("id_a").cast("long"), F.col("id_b").cast("long")
-    edges = (
+    edges = cut(
         pairs_df.select(F.greatest(pa, pb).alias("u"),
                         F.least(pa, pb).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     prev_sig = None
     rounds = 0
@@ -445,12 +445,12 @@ def neardup_components(
             .unionByName(smin.select("u", F.col("mn").alias("v")))
             .distinct()
         )
-        # ONE action per round: the checksum agg materializes the lazy
-        # checkpoint. bit_xor (not sum) so the 10^12-edge case cannot
+        # ONE action per round: the checksum agg materializes the cut.
+        # bit_xor (not sum) so the 10^12-edge case cannot
         # overflow under ANSI arithmetic; count + per-column xor + xor of
         # a pair hash makes accidental collision astronomically unlikely,
         # and a collision is caught by the exact check below anyway.
-        new_edges = small.localCheckpoint(eager=False)
+        new_edges = cut(small)
         sig = tuple(
             new_edges.agg(
                 F.count("*").alias("c"),
@@ -1092,14 +1092,13 @@ def winnow_pairs(
     ``_cap_doc_freq``), bounding per-key join fan-out at df².
 
     The doc-level fingerprint set is referenced twice by the self-join,
-    so it is lazily localCheckpointed (the double-reference lesson) —
-    the gram/selection pipeline executes once."""
+    so it is cut — the gram/selection pipeline executes once."""
     fps = (
         winnow_fingerprints(df, text_col, id_col, k=k, window=window)
         .select("doc_id", F.col("fp_h48").alias("fp"))
         .distinct()
     )
-    fps = _cap_doc_freq(fps, "fp", max_fp_df).localCheckpoint(eager=False)
+    fps = cut(_cap_doc_freq(fps, "fp", max_fp_df))
     a, b = fps.alias("a"), fps.alias("b")
     return (
         a.join(
@@ -1139,16 +1138,15 @@ def ngram_containment_pairs(
     bounded at df²; containment is then over discriminative shingles,
     numerator AND denominator). The capped shingle table is referenced
     three times (sizes + both join sides) and the intersection
-    aggregate twice (the direction swap), so each is lazily
-    localCheckpointed. Docs with fewer than n surviving shingle words
-    produce no rows."""
-    gx = _cap_doc_freq(
+    aggregate twice (the direction swap), so each is cut. Docs with
+    fewer than n surviving shingle words produce no rows."""
+    gx = cut(_cap_doc_freq(
         _shingle_table(df, text_col, id_col, n), "g", max_doc_freq
-    ).localCheckpoint(eager=False)
+    ))
     sizes = gx.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_grams")
     )
-    inter = (
+    inter = cut(
         gx.alias("a")
         .join(
             gx.alias("b"),
@@ -1160,7 +1158,6 @@ def ngram_containment_pairs(
             F.col("b.doc_id").alias("id_b"),
         )
         .agg(F.count("*").cast("long").alias("inter"))
-        .localCheckpoint(eager=False)
     )
     both = inter.unionByName(
         inter.select(

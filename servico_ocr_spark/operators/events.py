@@ -30,6 +30,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .common import cut
+
 
 def event_path_ngrams(
     events: DataFrame,
@@ -85,8 +87,8 @@ def funnel_counts(
     per user. Steps that nobody reaches still emit a row (n_users 0)
     via the final left join from the literal step dimension — the
     explode-drops-rows lesson applied to aggregation. Step frames are
-    lazily localCheckpointed (each is referenced twice: next step's
-    join + the final union — the hits/bfs lesson)."""
+    cut (each is referenced twice: next step's join + the final
+    union)."""
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
     if len(set(steps)) != len(steps):
@@ -98,25 +100,22 @@ def funnel_counts(
     ).where(F.col("_et").isin(list(steps)))
 
     # each step frame is referenced TWICE (next step's join + the
-    # union), with different downstream shapes — the hits/bfs lesson:
-    # lazily localCheckpoint each, or step i re-scans the source i
-    # times and the K-step funnel costs O(K^2) scans (measured 11
-    # parquet scans for K=3 before the cut, K after)
-    cur = (
+    # union), with different downstream shapes: uncut, step i re-scans
+    # the source i times and the K-step funnel costs O(K^2) scans
+    # (measured 11 parquet scans for K=3 before the cut, K after)
+    cur = cut(
         ev.where(F.col("_et") == steps[0])
         .groupBy("_u")
         .agg(F.min("_ts").alias("_t"))
-        .localCheckpoint(eager=False)
     )
     reached = [cur.select(F.lit(1).cast("long").alias("step"), "_u")]
     for i, s in enumerate(steps[1:], start=2):
-        cur = (
+        cur = cut(
             ev.where(F.col("_et") == s)
             .join(cur.select("_u", F.col("_t").alias("_prev")), "_u")
             .where(F.col("_ts") > F.col("_prev"))
             .groupBy("_u")
             .agg(F.min("_ts").alias("_t"))
-            .localCheckpoint(eager=False)
         )
         reached.append(
             cur.select(F.lit(i).cast("long").alias("step"), "_u")
@@ -290,21 +289,20 @@ def rate_anomalies(
     headline incident, and it only exists as a row if the calendar span
     is generated (the activity_gapfill shape: explode(sequence) over
     the per-key span relation). ``daily`` is referenced three times
-    (span, baseline, zero-fill join) and is lazily localCheckpointed —
-    it is bounded by keys × span days, not event count.
+    (span, baseline, zero-fill join) and is cut — it is bounded by
+    keys × span days, not event count.
 
     BIGINT bound: ``dev²`` requires |n·nd − s| < 3·10⁹ — per-key volume
     × span-days below ~3·10⁹ (e.g. 10⁶/day over 3 years). Beyond that,
     pre-scale the counts (flag on thousands) before calling; the test
     is scale-equivariant up to the rescaled resolution."""
-    daily = (
+    daily = cut(
         events.select(
             F.col(key_col).alias("key"),
             F.to_date(ts_col).alias("_day"),
         )
         .groupBy("key", "_day")
         .agg(F.count("*").cast("long").alias("n_events"))
-        .localCheckpoint(eager=False)
     )
     base = daily.groupBy("key").agg(
         F.min("_day").alias("_d0"),

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .common import cut
+
 #: completeness radius of the deletion-neighborhood candidates; the
 #: verify step re-checks with the exact metric, so this is also the
 #: output's max distance
@@ -78,14 +80,12 @@ def edit1_linkage(
     one position all share deletion keys); capped keys lose those
     candidates, a documented recall trade."""
     # counts is referenced four times (variant build ×2 via the
-    # self-join, n_a, n_b) — without the lazy cut the input scan +
-    # aggregation ran twice in the executed plan (the hits/bfs
-    # double-reference lesson); with it, one scan
-    counts = (
+    # self-join, n_a, n_b) — without the cut the input scan +
+    # aggregation ran twice in the executed plan; with it, one scan
+    counts = cut(
         df.select(F.col(str_col).alias("title"))
         .groupBy("title")
         .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=False)
     )
     keys = _deletion_keys(counts.select("title"), "title")
     if max_key_df is not None:

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.column import Column
 
-from .common import h48
+from .common import cut, h48
 
 #: flat anchor element: start tag, then text with no nested markup
 ANCHOR_TAG_RE = r"(?is)<a\s[^>]*>[^<]*</a>"
@@ -314,23 +314,18 @@ def pagerank(
     variant has the SAME per-round plan — one join + one union-aggregate
     — and its only outer join is the static seed join.
 
-    The edge table is always lazily ``localCheckpoint``ed once, before
-    iterating. The iteration references ``edges`` from the node table
-    (twice, one per endpoint) and every per-round join, and every
-    caller passes a DERIVED relation (link extraction → distinct, a
-    host-graph self-join, a word-adjacency explode). Uncut, the logical
-    plan inlines that whole upstream about 20 times, so the cost is
-    not only re-execution — runtime exchange reuse dedupes much of
-    that — but driver-side analysis, physical planning and AQE
-    re-planning of the bloated plan in every round. Measured on the
-    sf0.1 link graph (``local[4]``, warm query + parquet write): 4.7–5.3
-    s uncut, 3.1–4.0 s with this cut; a cut after every round took
-    4.3 s and an eager cut 3.7 s, so the one lazy cut stays.
-    host_pagerank uncut re-ran its regex upstream 44× (19.5 s vs 3.3
-    s). Same discipline as :func:`bfs_depths` (edge cut measured 9.6 →
-    3.1 s).
+    The edge table is always :func:`cut` once, before iterating. The
+    iteration references ``edges`` from the node table (twice, one per
+    endpoint) and every per-round join, and every caller passes a
+    DERIVED relation (link extraction → distinct, a host-graph
+    self-join, a word-adjacency explode), whose plan would otherwise be
+    inlined about 20 times. Measured on the sf0.1 link graph
+    (``local[4]``, warm query + parquet write): 4.7–5.3 s uncut,
+    3.1–4.0 s with this cut; a cut after every round took 4.3 s and an
+    eager cut 3.7 s, so the one lazy cut stays. host_pagerank uncut
+    re-ran its regex upstream 44× (19.5 s vs 3.3 s).
     """
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    edges = cut(edges.select("src", "dst"))
     nodes = link_degrees(edges)
     base = scale * (100 - damping_pct) // 100
     if seeds is None:
@@ -396,7 +391,7 @@ def hits_scores(
     leaked dangling mass). Update order is the classic one: authorities
     from hubs first, then hubs from the NEW authorities.
 
-    Scale shape: the edge table is local-checkpointed ONCE up front —
+    Scale shape: the edge table is cut ONCE up front —
     each round joins it by src (auth step) AND by dst (hub step), two
     different partitionings that ReuseExchange can never collapse (the
     triangle_counts/bfs_depths lesson), so without the cut the upstream
@@ -407,12 +402,12 @@ def hits_scores(
     score frames hold only NONZERO nodes (missing rows contribute
     nothing to a sum); zero-degree sides are restored once at the end
     with left joins from the node universe (the explode-drops-rows
-    lesson). Raw frames are lazily local-checkpointed because each is
-    referenced twice (max + division) with different downstream shapes.
+    lesson). Raw frames are cut because each is referenced twice (max +
+    division) with different downstream shapes.
     """
     if iterations < 1:
         raise ValueError("iterations >= 1 required")
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    edges = cut(edges.select("src", "dst"))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -423,12 +418,11 @@ def hits_scores(
     def _half(frm: DataFrame, key: str, out: str) -> DataFrame:
         """One half round: sum ``frm``'s scores onto the ``out`` end of
         every edge whose ``key`` end matches, then max-normalize."""
-        raw = (
+        raw = cut(
             edges.alias("e")
             .join(frm.alias("f"), F.col(f"e.{key}") == F.col("f.node"))
             .groupBy(F.col(f"e.{out}").alias("node"))
             .agg(F.sum("f.s").cast("long").alias("raw"))
-            .localCheckpoint(eager=False)
         )
         mx = raw.agg(F.coalesce(F.max("raw"), F.lit(0)).alias("_mx"))
         return raw.crossJoin(F.broadcast(mx)).select(
@@ -455,9 +449,7 @@ def hits_scores(
     )
 
 
-def triangle_counts(
-    edges: DataFrame, materialize: bool = True
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """(node, n_triangles): per-node undirected triangle participation
     over a directed edge table (direction collapsed, self-loops and
     duplicates dropped) — the raw ingredient of clustering coefficients
@@ -477,17 +469,13 @@ def triangle_counts(
     anything O(nodes). Zero-triangle nodes are restored with a left
     join from the degree table (the explode-drops-rows lesson).
 
-    ``materialize=True`` (default) local-checkpoints the undirected
-    edge table and the oriented table: the three wedge/closure
-    consumers of ``o`` need THREE DIFFERENT hash partitionings (by b,
-    by a, by (a,b)), so ReuseExchange can never collapse them — without
-    a checkpoint the whole upstream (here: page synthesis + regex link
-    parse) re-executes once per consumer (measured: 17 input scans,
-    0 ReusedExchange, 5.7 s at sf0.1 → 1 scan after). This is NOT the
-    minhash case where identical exchanges made explicit
-    materialization redundant; differing partitionings are exactly
-    when an explicit cut is required."""
-    und = (
+    The undirected edge table and the oriented table are cut: the three
+    wedge/closure consumers of ``o`` need THREE DIFFERENT hash
+    partitionings (by b, by a, by (a,b)), so without the cut the whole
+    upstream (here: page synthesis + regex link parse) re-executes once
+    per consumer (measured: 17 input scans, 0 ReusedExchange, 5.7 s at
+    sf0.1 → 1 scan after)."""
+    und = cut(
         edges.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
@@ -495,8 +483,6 @@ def triangle_counts(
         )
         .distinct()
     )
-    if materialize:
-        und = und.localCheckpoint(eager=False)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -513,12 +499,10 @@ def triangle_counts(
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    o = ed.select(
+    o = cut(ed.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    )
-    if materialize:
-        o = o.localCheckpoint(eager=False)
+    ))
     tri = (
         o.alias("e1")
         .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
@@ -572,9 +556,8 @@ def label_propagation(
     bipartite structures, which a fixed round budget turns into a
     deterministic answer rather than a hang.
 
-    Scale shape: the symmetric neighbor table is local-checkpointed
-    ONCE up front (it is joined every round — the triangle_counts /
-    bfs_depths lesson). Each round is one equi-join (neighbor label
+    Scale shape: the symmetric neighbor table is cut ONCE up front (it
+    is joined every round). Each round is one equi-join (neighbor label
     lookup), one map-side-combinable count by (node, label), one
     window-max over node, one min-agg by node — all shuffles keyed on
     node, and the window/final agg reuse the (node, label) exchange's
@@ -582,9 +565,8 @@ def label_propagation(
     sees one window partition of ≤ |distinct neighbor labels| rows — a
     bounded linear straggler, the `_cap_doc_freq` trade (labels
     coarsen every round, so the distinct-label count only shrinks).
-    Labels are lazily checkpointed per round: round k's frame is
-    otherwise re-derived from scratch by round k+1's join at plan
-    explosion cost (the bpe_learn per-step discipline).
+    Labels are cut per round: round k's frame is otherwise re-derived
+    from scratch by round k+1's join.
     """
     if iterations < 1:
         raise ValueError("iterations >= 1 required")
@@ -596,10 +578,9 @@ def label_propagation(
         )
         .distinct()
     )
-    nbr = (
+    nbr = cut(
         und.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(und.select(F.col("v"), F.col("u")))
-        .localCheckpoint(eager=False)
     )
     labels = nbr.select("node").distinct().select(
         "node", F.col("node").alias("label")
@@ -614,12 +595,11 @@ def label_propagation(
             )
             .agg(F.count("*").alias("cnt"))
         )
-        labels = (
+        labels = cut(
             cnt.withColumn("_mx", F.max("cnt").over(w))
             .where(F.col("cnt") == F.col("_mx"))
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
         )
     return labels
 
@@ -716,10 +696,9 @@ def bfs_depths(
     (edge table partitioning reused across rounds), one distinct
     (map-side-combinable — a hub reached by 10⁹ frontier nodes
     collapses before the shuffle), one anti-join against the settled
-    set. Each new layer is ``localCheckpoint``-ed (its lineage is
-    referenced by the union AND the next round's join and anti-join —
-    the star-contraction discipline from `dedup.neardup_components`),
-    and the materialized count doubles as the convergence signal: an
+    set. Each new layer is cut (its lineage is referenced by the union
+    AND the next round's join and anti-join), and the count that
+    materializes it doubles as the convergence signal: an
     empty frontier ends the loop before ``max_hops``, so the fixed cap
     is a budget, not a cost.
 
@@ -732,30 +711,25 @@ def bfs_depths(
     """
     if max_hops < 0:
         raise ValueError("max_hops >= 0 required")
-    # One materialization of the edge table up front: every round joins
-    # and every upstream (html parse → href resolve → distinct) would
-    # otherwise re-execute per round — the triangle_counts lesson
-    # (measured here: 9.6 s → 3.1 s at sf0.1, ~12 rounds). Lazy: the
-    # first round's count materializes it.
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    dist = (
+    # Every round joins the edge table, so its upstream (html parse →
+    # href resolve → distinct) would otherwise re-execute per round
+    # (measured: 9.6 s → 3.1 s at sf0.1, ~12 rounds).
+    edges = cut(edges.select("src", "dst"))
+    dist = cut(
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("long").alias("depth"))
-        .localCheckpoint(eager=False)
     )
     frontier = dist
     for h in range(1, max_hops + 1):
-        # lazy checkpoint: the count() below is the ONE job that
-        # materializes the layer (an eager checkpoint + count would be
-        # two jobs per round), and it doubles as the fixpoint signal
-        new = (
+        # the count() below is the ONE job per round: it materializes
+        # the layer and is the fixpoint signal
+        new = cut(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
             .select("node", F.lit(h).cast("long").alias("depth"))
-            .localCheckpoint(eager=False)
         )
         if new.count() == 0:
             break
@@ -774,9 +748,8 @@ def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 12) -> DataFrame:
 
     Round shape: one degree aggregation (map-side combinable) + two
     semi-equi-joins of the edge table against the ≤-node-sized keep
-    set; the edge table is lazily localCheckpointed per round (it is
-    referenced by the next round's degree agg AND both keep joins —
-    the bpe_learn lineage discipline), and the ONE action per round is
+    set; the edge table is cut per round (it is referenced by the next
+    round's degree agg AND both keep joins), and the ONE action per round is
     the surviving-edge count, which doubles as the convergence signal:
     peeling only removes, so an unchanged count IS the fixpoint (the
     star-contraction one-action rule). Early exit leaves the result
@@ -792,14 +765,13 @@ def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 12) -> DataFrame:
         raise ValueError("k must be >= 1")
     if max_rounds < 1:
         raise ValueError("max_rounds must be >= 1")
-    und = (
+    und = cut(
         edges.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n_edges = und.count()
     for _ in range(max_rounds):
@@ -812,11 +784,10 @@ def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 12) -> DataFrame:
             .agg(F.count("*").alias("_d"))
         )
         keep = deg.where(F.col("_d") >= int(k)).select("node")
-        und = (
+        und = cut(
             und.join(keep.withColumnRenamed("node", "u"), "u")
             .join(keep.withColumnRenamed("node", "v"), "v")
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
         n2 = und.count()
         if n2 == n_edges:
@@ -852,16 +823,16 @@ def random_walks(
     node) computes the wanted index, then (node, idx) ⋈ the ranked
     neighbor table matches exactly one row — a 10⁶-out-link hub costs
     the hash-join probe one lookup per visiting walk, not a deg-wide
-    expansion. The ranked/degree tables are built once and lazily
-    localCheckpointed (referenced ``depth`` times — the bfs edge-table
-    lesson), as is each step's frontier (referenced by the union AND
-    the next step). The neighbor-rank window is per-src (straggler
-    bounded by max outdegree, the asof trade).
+    expansion. The ranked/degree tables are built once and cut
+    (referenced ``depth`` times), as is each step's frontier
+    (referenced by the union AND the next step). The neighbor-rank
+    window is per-src (straggler bounded by max outdegree, the asof
+    trade).
     """
     if depth < 0:
         raise ValueError("depth >= 0 required")
     rw = Window.partitionBy("src").orderBy("dst")
-    ranked = (
+    ranked = cut(
         edges.select("src", "dst")
         .distinct()
         .select(
@@ -869,26 +840,24 @@ def random_walks(
             "dst",
             (F.row_number().over(rw) - 1).cast("long").alias("idx"),
         )
-        .localCheckpoint(eager=False)
     )
-    degs = ranked.groupBy("src").agg(
-        F.count("*").cast("long").alias("deg")
-    ).localCheckpoint(eager=False)
+    degs = cut(
+        ranked.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
+    )
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    cur = nodes.select(
+    cur = cut(nodes.select(
         F.col("node").alias("start"),
         F.lit(0).cast("long").alias("step"),
         "node",
-    ).localCheckpoint(eager=False)
+    ))
     out = cur
     for t in range(1, depth + 1):
-        # fresh per-step aliases: the lazy checkpoints keep attribute
-        # ids, so re-joining `ranked` each round would otherwise make
-        # its columns ambiguous against the frontier they produced
+        # fresh per-step aliases (cuts keep attribute ids): re-joining
+        # `ranked` would otherwise be ambiguous against its own frontier
         c, d, r = cur.alias("c"), degs.alias("d"), ranked.alias("r")
         wanted = c.join(d, F.col("c.node") == F.col("d.src")).select(
             F.col("c.start").alias("start"),
@@ -898,7 +867,7 @@ def random_walks(
                 F.col("d.deg"),
             ).alias("idx"),
         )
-        cur = (
+        cur = cut(
             wanted.alias("w")
             .join(
                 r,
@@ -910,7 +879,6 @@ def random_walks(
                 F.lit(t).cast("long").alias("step"),
                 F.col("r.dst").alias("node"),
             )
-            .localCheckpoint(eager=False)
         )
         out = out.unionByName(cur)
     return out

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .common import h48, words_array
+from .common import cut, h48, words_array
 
 #: parts-per-1e6 probability scale shared by the model and the scores
 LM_SCALE = 1_000_000
@@ -92,10 +92,9 @@ def lm_doc_scores(
     every document's bigrams exist in the model, so there is no unseen
     backoff; a held-out model would add a left join with a floor).
 
-    The bigram stream is built ONCE and lazily localCheckpointed — the
-    model aggregation and the per-doc side both read it, and without
-    the cut the doc-keyed window subtree executes twice (the hits/bfs
-    double-reference lesson). The per-doc side pre-aggregates to
+    The bigram stream is built ONCE and cut — the model aggregation and
+    the per-doc side both read it, and without the cut the doc-keyed
+    window subtree executes twice. The per-doc side pre-aggregates to
     (doc_id, w1, w2, occurrences) BEFORE joining the model, so the join
     probe carries per-doc distinct bigrams, not raw occurrences; a
     corpus-hot bigram ("of the" in most documents) is a bounded probe
@@ -104,7 +103,7 @@ def lm_doc_scores(
     from the id universe with ``n_bigrams = 0, score = 0`` (the
     zero-token restore rule) so the percentile stage sees EVERY
     document, as CCNet's does."""
-    bi = _doc_bigrams(df, text_col, id_col).localCheckpoint(eager=False)
+    bi = cut(_doc_bigrams(df, text_col, id_col))
     model = (
         bi.groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("n_bigram"))
@@ -172,21 +171,16 @@ def skipgram_pairs(
     leads together (array + posexplode — the window subtree evaluates
     once); pair counting is a map-side-combinable agg bounded by
     distinct pairs ≤ |V|². The aggregated forward-pair table is
-    referenced twice for the symmetric merge, so it is lazily
-    localCheckpointed (the hits/bfs double-reference lesson).
+    referenced twice for the symmetric merge, so it is cut.
     """
     tokens = df.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(words_array(F.col(text_col))).alias("pos", "w"),
     )
     # vocab-sized and referenced twice (total + the ppm projection):
-    # without the lazy cut the corpus-wide count agg — and its scan —
+    # without the cut the corpus-wide count agg — and its scan —
     # executes twice (measured 5 scans -> 2 at sf0.01)
-    freq = (
-        tokens.groupBy("w")
-        .agg(F.count("*").cast("long").alias("f"))
-        .localCheckpoint(eager=False)
-    )
+    freq = cut(tokens.groupBy("w").agg(F.count("*").cast("long").alias("f")))
     total = freq.agg(
         F.greatest(F.sum("f"), F.lit(1)).cast("long").alias("t")
     )
@@ -215,12 +209,11 @@ def skipgram_pairs(
             *[F.lead("w", d).over(win) for d in range(1, window + 1)]
         ).alias("nexts"),
     )
-    fwd = (
+    fwd = cut(
         ctxs.select("center", F.explode("nexts").alias("context"))
         .where(F.col("context").isNotNull())
         .groupBy("center", "context")
         .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=False)
     )
     both = fwd.unionByName(
         fwd.select(
@@ -252,12 +245,11 @@ def lm_quality_buckets(scores: DataFrame) -> DataFrame:
     tie-block lands whole in the better bucket).
 
     ``scores`` is referenced TWICE (histogram build + the join back),
-    so it is lazily localCheckpointed here — without the cut the whole
-    upstream scoring pipeline (window, model join, restore join)
-    executes twice, verified in the plan (the hits/bfs double-reference
-    lesson).
+    so it is cut here — without the cut the whole upstream scoring
+    pipeline (window, model join, restore join) executes twice,
+    verified in the plan.
     """
-    scores = scores.localCheckpoint(eager=False)
+    scores = cut(scores)
     w = (
         Window.orderBy(F.col("lm_score_x1e6").desc())
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -28,16 +28,6 @@ from pyspark.sql.types import (
 
 from ..boundary import map_documents
 
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_type", StringType(), True),  # image|audio|video
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("n_frames", IntegerType(), True),
-        StructField("sample_rate", IntegerType(), True),
-    ]
-)
-
 FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .common import h48, norm_text, words_array
+from .common import cut, h48, norm_text, words_array
 
 
 def assign_split(
@@ -363,16 +363,16 @@ def negative_sampling(
     bucket windows); the corpus count is a 1-row broadcast (never a
     driver collect); the rank→id resolution is ONE equi-join on the
     dense rank. The dict is referenced twice (anchor side + negative
-    lookup) — lazily localCheckpointed."""
+    lookup) — cut."""
     from .encode import dictionary_encode
 
     if m < 1:
         raise ValueError("m must be >= 1")
-    d = dictionary_encode(
+    d = cut(dictionary_encode(
         df.select(F.col(id_col).cast("string").alias("value")),
         "value",
         buckets=buckets,
-    ).localCheckpoint(eager=False)
+    ))
     n = d.select(F.count("*").cast("long").alias("_n"))
     shifted = (
         d.select(

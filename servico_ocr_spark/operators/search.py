@@ -34,7 +34,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .common import distinct_words, norm_text, words_array
+from .common import cut, distinct_words, norm_text, words_array
 
 __all__ = ["bm25_by_example", "bm25_hard_negatives", "bm25_topk", "rrf_fuse"]
 
@@ -178,7 +178,7 @@ def bm25_by_example(
 
     Scale shape: ONE corpus scan builds the postings table
     ((doc, word) → tf, dl — the inverted-index shape retrieval systems
-    materialize anyway), lazily localCheckpointed because everything
+    materialize anyway), cut because everything
     downstream derives from it: corpus scalars (re-aggregated from
     postings, no second scan), per-word df (vocab-sized, capped), the
     query term sets (postings ⋈ broadcast query ids), and the match
@@ -197,7 +197,7 @@ def bm25_by_example(
     # expression — a CodegenFallback — so that shape evaluated the
     # whole normalize+split subtree INTERPRETED and TWICE per row
     # (measured 15.6 s driver-side materialization of the postings
-    # checkpoint at sf0.1, jstack showing StringTranslate.nullSafeEval;
+    # cut at sf0.1, jstack showing StringTranslate.nullSafeEval;
     # the r2 HOF lesson, re-learned here). Exploding the raw split and
     # filtering '' rows relationally keeps every expression inside
     # whole-stage codegen; dl (non-empty token count) is recovered as
@@ -207,14 +207,13 @@ def bm25_by_example(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(norm_text(F.col(text_col)), " ")).alias("word"),
     ).where(F.col("word") != "")
-    postings = (
+    postings = cut(
         tok.groupBy("doc_id", "word")
         .agg(F.count("*").cast("long").alias("tf"))
         .withColumn(
             "dl",
             F.sum("tf").over(Window.partitionBy("doc_id")).cast("long"),
         )
-        .localCheckpoint(eager=False)
     )
     scalars = (
         postings.groupBy("doc_id")
@@ -307,10 +306,10 @@ def bm25_hard_negatives(
     pass would NOT have removed it".
 
     Shape: bm25_by_example does the heavy lifting (one corpus scan);
-    the verify stage is the capped word table lazily localCheckpointed
-    (three references: sizes + both join sides), one fan-out join
-    bounded by |pairs|·|query words|, and LEFT joins back onto the
-    candidate list so zero-overlap pairs survive as jaccard 0 (the
+    the verify stage is the capped word table, cut (three references:
+    sizes + both join sides), one fan-out join bounded by
+    |pairs|·|query words|, and LEFT joins back onto the candidate list
+    so zero-overlap pairs survive as jaccard 0 (the
     explode-drops-empty-rows lesson). Final rank is a per-query window
     over ≤ cand_k rows."""
     from .dedup import _cap_doc_freq
@@ -323,14 +322,14 @@ def bm25_hard_negatives(
         text_col=text_col,
         id_col=id_col,
     ).select("query_id", "doc_id", "score")
-    wx = _cap_doc_freq(
+    wx = cut(_cap_doc_freq(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.explode(distinct_words(F.col(text_col))).alias("w"),
         ),
         "w",
         max_word_df,
-    ).localCheckpoint(eager=False)
+    ))
     sizes = wx.groupBy("doc_id").agg(F.count("*").cast("long").alias("nw"))
     inter = (
         cands.join(

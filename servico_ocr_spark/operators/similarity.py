@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
 
-from .common import h48
+from .common import cut, h48
 
 _SCALE = 1000
 
@@ -496,9 +496,8 @@ def margin_bitext(
     `brute_force_topk`. At corpus scale pass ``candidates`` = any
     (x_id, y_id, cos_sim_e6) frame from the ANN path (`ivf_ann_topk` /
     `lsh_ann_topk` unioned both directions) — the margin stage itself is candidate-bounded: the
-    scored table is lazily localCheckpointed (it feeds both
-    neighborhood aggs and the final ranking — the triple-reference
-    lesson), the per-endpoint averages are two combinable aggs whose
+    scored table is cut (it feeds both neighborhood aggs and the final
+    ranking), the per-endpoint averages are two combinable aggs whose
     state is one row per endpoint, and the best-match windows
     partition by endpoint with ≤ |candidates-per-endpoint| rows.
     """
@@ -522,9 +521,7 @@ def margin_bitext(
                 ).cast("long").alias("cos_sim_e6"),
             )
         )
-    scored = candidates.select(
-        "x_id", "y_id", "cos_sim_e6"
-    ).localCheckpoint(eager=False)
+    scored = cut(candidates.select("x_id", "y_id", "cos_sim_e6"))
     wx = Window.partitionBy("x_id").orderBy(
         F.desc("cos_sim_e6"), F.asc("y_id")
     )

@@ -30,7 +30,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .common import h48
+from .common import cut, h48
 
 
 def exact_group_quantiles(
@@ -301,14 +301,13 @@ def majority_label(
     per-group window over ≤ |labels| rows (a label-cardinality window,
     not a data window — no hot-group straggler is possible because the
     window input is the aggregate). The counts table feeds the totals
-    agg and the final join, so it is lazily localCheckpointed."""
-    counts = (
+    agg and the final join, so it is cut."""
+    counts = cut(
         df.groupBy(
             F.col(group_col).alias("group"),
             F.col(label_col).alias("label"),
         )
         .agg(F.count(id_count).cast("long").alias("n_label"))
-        .localCheckpoint(eager=False)
     )
     totals = counts.groupBy("group").agg(
         F.sum("n_label").cast("long").alias("n_group")

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .common import h48, norm_text, words_array
+from .common import cut, h48, norm_text, words_array
 
 # n-gram-free heuristic language ID: stopword hit counting over fixed
 # marker lists (deterministic argmax, ties broken by language code order).
@@ -661,9 +661,9 @@ def bpe_learn(df: DataFrame, text_col: str = "text",
     only through the ONE word-count aggregation up front; all five
     windows of a step share the per-word partitioning (one exchange);
     the step's top-1 pair is a 1-row broadcast, never a driver collect.
-    ``merges`` is a small constant (plan depth grows linearly with it —
-    localCheckpoint every few steps if ever pushed past ~10, the
-    pagerank discipline)."""
+    The loop cuts the symbol table at the start of every step, so each
+    step's plan has a fixed depth over the previous step's cut; the
+    output is a union of ``merges`` one-row branches."""
     steps, _ = _bpe_loop(df, text_col, merges)
     out = steps[0]
     for s_df in steps[1:]:
@@ -696,10 +696,9 @@ def _bpe_loop(
     steps = []
     for step in range(1, merges + 1):
         # each step references sym ~3x (pair counting, top-1, merge
-        # application) — without a cut, lineage grows ~3^k. Lazy
-        # localCheckpoint keeps it linear (the pagerank/star-contraction
-        # discipline; same reasoning as links.triangle_counts).
-        sym = sym.localCheckpoint(eager=False)
+        # application) — without a cut, lineage grows ~3^k; cut every
+        # step, each step's plan starts from the previous step's cut.
+        sym = cut(sym)
         pairs = sym.withColumn("nxt", F.lead("s").over(w_word)).where(
             F.col("nxt").isNotNull()
         )

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.column import Column
 
+from .common import cut
+
 #: query parameters that never contribute to page identity
 TRACKING_PARAM_RE = "^(utm_[a-z0-9_]*|fbclid|gclid|msclkid|ref)="
 
@@ -349,12 +351,10 @@ def crawl_schedule(
         width = (1 << 48) // buckets
         # t feeds both the local window and the bucket-size aggregate;
         # their exchanges carry different payloads (partial-agg rows vs
-        # raw), so ReuseExchange cannot collapse them — the lazy cut
+        # raw), so ReuseExchange cannot collapse them — the cut
         # keeps the canonicalize projection + scan to ONE execution
         # (measured 2 scans / 0 reuse without it)
-        t = t.withColumn(
-            "_b", F.expr(f"_h div {width}L")
-        ).localCheckpoint(eager=False)
+        t = cut(t.withColumn("_b", F.expr(f"_h div {width}L")))
         w_local = Window.partitionBy("host", "_b").orderBy("_h", "doc_id")
         sizes = t.groupBy("host", "_b").agg(F.count("*").alias("_c"))
         w_off = (
@@ -457,8 +457,8 @@ def path_prefix_rollup(
 def robots_paths(
     pages: DataFrame, url_col: str = "url", id_col: str = "doc_id"
 ) -> DataFrame:
-    """``(doc_id, host, path)`` from canonical urls, lazily
-    ``localCheckpoint``ed: the one canonicalization a robots gate
+    """``(doc_id, host, path)`` from canonical urls, cut: the one
+    canonicalization a robots gate
     needs, shared by the rule side (a caller deriving rules from the
     crawl's own hosts) and the probe side of :func:`robots_match`.
     Uncut, the regex chain (plus any url synthesis upstream) inlined
@@ -466,11 +466,11 @@ def robots_paths(
     distinct — "Code grows beyond 64 KB", and the stage silently ran
     interpreted (with ``spark.sql.codegen.fallback=false`` the query
     failed to compile)."""
-    return canonicalize_urls(pages, url_col).select(
+    return cut(canonicalize_urls(pages, url_col).select(
         F.col(id_col).alias("doc_id"),
         "host",
         url_path(F.col("canonical_url")).alias("path"),
-    ).localCheckpoint(eager=False)
+    ))
 
 
 def robots_match(paths: DataFrame, rules: DataFrame) -> DataFrame:

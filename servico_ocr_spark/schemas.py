@@ -30,19 +30,6 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
-# Tesseract-TSV-shaped token table (app/util_ocr.py:27,102).
-TOKENS_SCHEMA = StructType(
-    [StructField("url", StringType(), False)]
-    + [
-        StructField(name, IntegerType(), True)
-        for name in (
-            "level", "page_num", "block_num", "par_num", "line_num",
-            "word_num", "left", "top", "width", "height", "conf",
-        )
-    ]
-    + [StructField("text", StringType(), True)]
-)
-
 # Enriched box record (app/util_ocr.py:6-24 after cleanup at :296-299;
 # ordem_y survives cleanup in the reference output and is kept).
 BOX_STRUCT = StructType(

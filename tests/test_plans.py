@@ -2,6 +2,9 @@
 pruning, broadcast joins, shuffle-free extraction) must survive refactors.
 """
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,7 +12,10 @@ import __spark_entry__ as entrymod
 from servico_ocr_spark.corpus import (
     html_pages_from_documents, pages_from_documents,
 )
+from servico_ocr_spark.operators.common import cut
 from servico_ocr_spark.pipeline import run_extraction
+
+REPO = Path(__file__).resolve().parent.parent
 
 SF = "/root/testdata/sf0.001"
 
@@ -789,3 +795,44 @@ def test_never_returned_parts_null_aware_anti_join(spark):
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti, BuildRight, true" in plan, plan[:3000]
+
+
+def test_every_lineage_cut_goes_through_cut():
+    """The cut policy lives in one function: across the package and the
+    driver entry, ``.localCheckpoint(`` is written exactly once, and
+    that one call is the body of ``operators.common.cut``."""
+    sources = sorted((REPO / "servico_ocr_spark").rglob("*.py"))
+    sources.append(REPO / "__spark_entry__.py")
+    hits = [
+        (path.relative_to(REPO).as_posix(), n)
+        for path in sources
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    assert len(hits) == 1, hits
+    path, line_no = hits[0]
+    assert path == "servico_ocr_spark/operators/common.py", hits
+    tree = ast.parse((REPO / path).read_text())
+    owners = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        and fn.lineno <= line_no <= fn.end_lineno
+    ]
+    assert owners == ["cut"], owners
+
+
+def test_cut_keeps_rows_and_drops_upstream(spark):
+    """``cut(df)`` returns ``df``'s rows, and its optimized plan is a
+    single ``LogicalRDD`` leaf: no scan, filter or projection above the
+    cut is left for the driver to re-plan."""
+    df = (
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .where(F.col("doc_id") % 3 == 0)
+        .select("doc_id", F.length("text").alias("n_chars"))
+    )
+    out = cut(df)
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LogicalRDD", plan.toString()
+    assert plan.children().isEmpty(), plan.toString()
+    assert sorted(out.collect()) == sorted(df.collect())
