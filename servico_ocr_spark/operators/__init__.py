@@ -17,7 +17,6 @@ from .dedup import (  # noqa: F401
     minhash_candidate_telemetry,
     minhash_estimator_calibration,
     minhash_near_duplicates,
-    minhash_signatures,
     neardup_components,
     ngram_candidate_telemetry,
     ngram_containment_pairs,

@@ -102,23 +102,12 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       num_hashes: int = 16) -> DataFrame:
-    """MinHash signature per doc: sig[i] = min over distinct words of
-    h48(i || ':' || word). Docs with no words produce no signature row.
-    """
-    exploded = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(distinct_words(F.col(text_col))).alias("w"),
-    )
-    return _signatures_from_words(exploded, num_hashes)
-
-
 def _signatures_from_words(exploded: DataFrame,
                            num_hashes: int) -> DataFrame:
-    """Signatures from a prebuilt (doc_id, w) distinct-word table — shared
-    by the capped and uncapped paths.
+    """MinHash signature per doc from a prebuilt (doc_id, w) distinct-word
+    table — shared by the capped and uncapped paths: sig[i] = min over
+    the doc's words of h48(i || ':' || word); a doc with no words gets
+    no row.
 
     Shape: compute the k hash columns in whole-stage codegen, take k min()
     aggregations (map-side partial combine) — NOT array higher-order

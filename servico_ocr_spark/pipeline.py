@@ -59,6 +59,8 @@ from .schemas import (
 
 JOB_TS = "2026-01-01 00:00:00"  # deterministic dthr (reference X8 format)
 HEAVY_PAGE_THRESHOLD = 8
+WEIGHT_COL = "est_pages"  # per-row weight weighted_repartition balances
+RANK_GROUPS = 64  # url-hash groups heavy rows are rank-ordered within
 
 
 def analyze_page_row(url: str, html: bytes, renders: bool = True):
@@ -200,16 +202,13 @@ def _partition_salts(spark: SparkSession, num_partitions: int) -> list[int]:
 
 
 def weighted_repartition(
-    df: DataFrame,
-    weight_col: str = "est_pages",
-    num_partitions: int | None = None,
-    rank_groups: int = 64,
+    df: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Skew-aware repartition: heavy rows are dealt round-robin within
     their url-hash group; light rows spread by full-entropy url hash (at
     10^12-doc scale they are uniform by the law of large numbers).
 
-    Heavy rows are rank-ordered by weight inside ``rank_groups`` url-hash
+    Heavy rows are rank-ordered by weight inside ``RANK_GROUPS`` url-hash
     groups (a distributed window — never a global sort), and row with
     rank r of group g goes to partition ``pmod(hash(g) + r − 1, P)`` via
     the murmur-salt table: each group's weight-sorted rank run deals
@@ -229,9 +228,9 @@ def weighted_repartition(
     salts = _partition_salts(df.sparkSession, num_partitions)
     salt_arr = F.array(*[F.lit(s) for s in salts])
 
-    heavy = F.col(weight_col) >= F.lit(HEAVY_PAGE_THRESHOLD)
-    group = F.pmod(F.xxhash64("url"), F.lit(rank_groups))
-    win = Window.partitionBy(group).orderBy(F.desc(weight_col), "url")
+    heavy = F.col(WEIGHT_COL) >= F.lit(HEAVY_PAGE_THRESHOLD)
+    group = F.pmod(F.xxhash64("url"), F.lit(RANK_GROUPS))
+    win = Window.partitionBy(group).orderBy(F.desc(WEIGHT_COL), "url")
     # heavy rows sort before light within each group (weight desc), so
     # row_number restricted to heavy rows IS their in-group weight rank
     rank = F.row_number().over(win)

@@ -797,21 +797,18 @@ def test_never_returned_parts_null_aware_anti_join(spark):
     assert "LeftAnti, BuildRight, true" in plan, plan[:3000]
 
 
-def test_every_lineage_cut_goes_through_cut():
-    """The cut policy lives in one function: across the package and the
-    driver entry, ``.localCheckpoint(`` is written exactly once, and
-    that one call is the body of ``operators.common.cut``."""
-    sources = sorted((REPO / "servico_ocr_spark").rglob("*.py"))
-    sources.append(REPO / "__spark_entry__.py")
+def _sole_site(needle: str, sources: list[Path]) -> tuple[str, list[str]]:
+    """The one line of ``sources`` that contains ``needle``: its path
+    relative to the repo and the names of the functions enclosing it,
+    outermost first. Fails if ``needle`` occurs on any other line."""
     hits = [
         (path.relative_to(REPO).as_posix(), n)
         for path in sources
         for n, line in enumerate(path.read_text().splitlines(), 1)
-        if ".localCheckpoint(" in line
+        if needle in line
     ]
     assert len(hits) == 1, hits
     path, line_no = hits[0]
-    assert path == "servico_ocr_spark/operators/common.py", hits
     tree = ast.parse((REPO / path).read_text())
     owners = [
         fn.name
@@ -819,7 +816,38 @@ def test_every_lineage_cut_goes_through_cut():
         if isinstance(fn, ast.FunctionDef)
         and fn.lineno <= line_no <= fn.end_lineno
     ]
+    return path, owners
+
+
+def test_every_lineage_cut_goes_through_cut():
+    """The cut policy lives in one function: across the package and the
+    driver entry, ``.localCheckpoint(`` is written exactly once, and
+    that one call is the body of ``operators.common.cut``."""
+    sources = sorted((REPO / "servico_ocr_spark").rglob("*.py"))
+    sources.append(REPO / "__spark_entry__.py")
+    path, owners = _sole_site(".localCheckpoint(", sources)
+    assert path == "servico_ocr_spark/operators/common.py", path
     assert owners == ["cut"], owners
+
+
+def test_analysis_table_has_one_appender():
+    """Batch and streaming faces append to the analysis table through
+    one writer: ``.write.mode("append")`` is written once in the
+    package, inside ``pipeline.write_analysis``."""
+    sources = sorted((REPO / "servico_ocr_spark").rglob("*.py"))
+    path, owners = _sole_site('.write.mode("append")', sources)
+    assert path == "servico_ocr_spark/pipeline.py", path
+    assert owners == ["write_analysis"], owners
+
+
+def test_stateful_streams_share_one_fold():
+    """Every ``applyInPandasWithState`` twin goes through one fold:
+    the call is written once in the package, inside
+    ``streaming.stateful._fold``."""
+    sources = sorted((REPO / "servico_ocr_spark").rglob("*.py"))
+    path, owners = _sole_site("applyInPandasWithState(", sources)
+    assert path == "servico_ocr_spark/streaming/stateful.py", path
+    assert owners == ["_fold"], owners
 
 
 def test_cut_keeps_rows_and_drops_upstream(spark):

@@ -34,6 +34,18 @@ def test_available_now_incremental(spark, tmp_path):
                       num_partitions=4)
     assert spark.read.parquet(output_dir).count() == 24
 
+    # crash after the sink append but before the commit-log entry: the
+    # restart replays the newest batch, whose urls are already committed
+    commits = tmp_path / "checkpoint" / "commits"
+    newest = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(newest)).unlink()
+    (commits / f".{newest}.crc").unlink(missing_ok=True)
+    run_available_now(spark, input_dir, output_dir, checkpoint,
+                      num_partitions=4)
+    out = spark.read.parquet(output_dir)
+    assert out.count() == 24
+    assert out.select("url").distinct().count() == 24
+
 
 def test_stateful_dedupe_stream(spark, tmp_path):
     """applyInPandasWithState dedupe: first occurrence per url wins,
@@ -51,7 +63,7 @@ def test_stateful_dedupe_stream(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(input_dir)
-        deduped = dedupe_stream(stream, "url", stream.schema)
+        deduped = dedupe_stream(stream, "url")
         (
             deduped.writeStream.format("parquet")
             .option("path", output_dir)
@@ -803,3 +815,84 @@ def test_count_streams_survive_null_keys(spark, tmp_path, op):
                  for r in spark.read.parquet(output_dir).collect())
     assert got and got == sorted(tuple(r[c] for c in cols)
                                  for r in want.collect())
+
+
+@pytest.mark.parametrize("op", ["sessionize", "latest_crawl", "dedupe"])
+def test_keyed_streams_keep_null_key(spark, tmp_path, op):
+    """A NULL user (sessionize), url (latest_crawl) or dedupe key is one
+    key, as in the batch ``groupBy``: the stream survives it across two
+    micro-batches, and the final row per key equals the batch reference
+    over their union."""
+    import datetime as dt
+
+    from pyspark.sql import Window, functions as F
+
+    from servico_ocr_spark.operators import latest_crawl
+    from servico_ocr_spark.streaming.stateful import (
+        dedupe_stream, latest_crawl_stream, sessionize_stream,
+    )
+
+    schema = "event_id long, user_id long, url string, ts timestamp"
+    t = lambda m: dt.datetime(2024, 3, 1, 12) + dt.timedelta(  # noqa: E731
+        minutes=m
+    )
+    # NULL key: 0 and 10 min (one session), then 90 min (a second one)
+    batches = [
+        [(1, 1, "http://a.com/", t(0)), (2, None, None, t(0)),
+         (3, None, None, t(10))],
+        [(4, None, None, t(90)), (5, 1, "http://a.com/", t(20))],
+    ]
+    ev = spark.createDataFrame(batches[0] + batches[1], schema)
+    if op == "sessionize":
+        run, key, counter = sessionize_stream, "user_id", "n_events"
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+        want = (
+            ev.withColumn(
+                "s", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+            )
+            .groupBy("user_id")
+            .agg(F.sum("s").alias("n_sessions"),
+                 F.count("*").alias("n_events"))
+        )
+    elif op == "latest_crawl":
+        run = lambda df: latest_crawl_stream(  # noqa: E731
+            df, ts_col="ts", id_col="event_id"
+        )
+        key, counter = "url", "n_crawls"
+        want = latest_crawl(ev, ts_col="ts", id_col="event_id") \
+            .withColumnRenamed("canonical_url", "url")
+    else:
+        run, key, counter = (lambda df: dedupe_stream(df, "url")), "url", None
+        want = ev.select("url").distinct()
+    cols = want.columns
+
+    input_dir = str(tmp_path / "in")
+    output_dir = str(tmp_path / "out")
+    for batch in batches:
+        spark.createDataFrame(batch, schema).write.mode("append").parquet(
+            input_dir
+        )
+        (
+            run(spark.readStream.schema(schema).parquet(input_dir))
+            .writeStream.format("parquet")
+            .option("path", output_dir)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    rows = spark.read.parquet(output_dir).collect()
+    final = {}
+    for r in rows:
+        if r[key] not in final or (
+            counter and r[counter] > final[r[key]][counter]
+        ):
+            final[r[key]] = r
+    if counter is None:
+        assert len(rows) == len(final)
+    got = sorted((tuple(r[c] for c in cols) for r in final.values()),
+                 key=repr)
+    assert None in final and got == sorted(
+        (tuple(r) for r in want.select(*cols).collect()), key=repr
+    )
